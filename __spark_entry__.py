@@ -34,10 +34,8 @@ SF0001 = "/root/testdata/sf0.001"
 # (applicationId, sf_dir, name) → analyzed reader DataFrame. Re-running
 # spark.read.parquet per query re-lists files and re-reads footers —
 # ~60-70 ms of pure driver latency per table per query. DataFrames are
-# immutable, so sharing one analyzed relation across queries is safe, and
-# bench.py's `.cache()` on these exact objects guarantees block-cache hits
-# by plan identity (not just canonicalized equality). The cluster analog
-# is a shared catalog/metastore relation cache.
+# immutable, so sharing one analyzed relation across queries is safe. The
+# cluster analog is a shared catalog/metastore relation cache.
 _T_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 

@@ -418,6 +418,26 @@ SELECT q_id, c_id, cosine, CAST(rank AS INTEGER) AS rank FROM out WHERE rank <= 
 """
 
 
+def _near_dup_block_count(spark, n: int, target_block_rows: int) -> int:
+    """Block count B for embedding_near_dups' tile sweep. Tiles are sized
+    so a pair of blocks fits comfortably in one task's memory; from 16k
+    rows on, B is floored so there are enough tiles to keep every core
+    busy: smallest B with B(B+1)/2 >= defaultParallelism (B=8 → 36 tiles
+    on 32 cores). The floor is skipped when the parallelism is unreadable
+    (Connect mode / API drift)."""
+    import math
+
+    n_blocks = max(1, math.ceil(n / target_block_rows))
+    if n >= 16_384:
+        try:
+            par = spark.sparkContext.defaultParallelism
+        except Exception:  # Connect mode / API drift
+            return n_blocks
+        b_min = math.ceil((math.sqrt(8 * par + 1) - 1) / 2)
+        n_blocks = max(n_blocks, b_min)
+    return n_blocks
+
+
 def embedding_near_dups(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -453,23 +473,12 @@ def embedding_near_dups(
     or prefilter candidates with `lsh_bucketed_topk`'s band buckets and
     exact-verify only those; keep this kernel for recall measurement on
     sampled blocks."""
-    import math
-
     import numpy as np
     import pandas as pd
 
-    spark = emb.sparkSession
     if n_blocks is None:
-        # count() is an aggregate-only job (no data to the driver); sizes
-        # tiles so a pair of blocks fits comfortably in one task's memory
-        n = emb.count()
-        n_blocks = max(1, math.ceil(n / target_block_rows))
-        if n >= 16_384:
-            # enough tiles to keep every core busy: smallest B with
-            # B(B+1)/2 >= defaultParallelism (B=8 → 36 tiles on 32 cores)
-            par = spark.sparkContext.defaultParallelism
-            b_min = math.ceil((math.sqrt(8 * par + 1) - 1) / 2)
-            n_blocks = max(n_blocks, b_min)
+        # count() is an aggregate-only job (no data to the driver)
+        n_blocks = _near_dup_block_count(emb.sparkSession, emb.count(), target_block_rows)
     n_blocks = int(n_blocks)
     base = emb.select(
         F.col(id_col).alias("vid"),

@@ -13,11 +13,19 @@ Reference semantics:
   next_href}} with all stats null when numPoints == 0
   (JSONBasicRollupsOutputSerializer.java:55-151, nulls :133-142)
 - timer percentiles flatten to pct_<label> (:158-162)
+
+Ordering: the reference walks `Points<T>`, an in-memory TreeMap keyed by
+timestamp, so time order is a property of the few rows sent back, not of
+the scan. The frames here are plain pruned projections; get_view and
+get_views_multi sort the bounded rows they collect by timestamp on the
+driver. A global orderBy on the frame would cost a range-bounds sampling
+job (a second scan) plus a shuffle exchange on every request.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,6 +44,9 @@ STAT_LEGALITY = {
     "latest": {"gauge"},
     "percentiles": {"timer"},
 }
+
+# case-folded select name → canonical stat name (fromStringList is case-insensitive)
+CANONICAL_STATS = {k.lower(): k for k in STAT_LEGALITY}
 
 DEFAULT_STATS = {
     "basic": ["average", "numPoints", "sum"],
@@ -111,9 +122,7 @@ def parse_params(params: dict[str, list[str]]) -> RollupsQueryParams:
         seen = set()
         for item in select:
             for s in item.split(","):
-                key = s.strip()
-                canonical = {k.lower(): k for k in STAT_LEGALITY}
-                k = canonical.get(key.lower())
+                k = CANONICAL_STATS.get(s.strip().lower())
                 if k and k not in seen:
                     seen.add(k)
                     stats.append(k)
@@ -155,7 +164,8 @@ def series_frame(
     rollup_type: str = "basic",
 ) -> DataFrame:
     """The scan: partition-pruned by resolution, pushed-down locator +
-    window predicates, time-ordered (O1), stat-projected."""
+    window predicates, stat-projected. Unordered: the O1 time order is
+    applied to the collected rows by get_view/get_views_multi."""
     chosen = effective_stats(stats, rollup_type)
     cols = [F.col("metric_name"), F.col("window_start").alias("timestamp")]
     for s in chosen:
@@ -174,7 +184,6 @@ def series_frame(
             & (F.col("window_start") < to_ms)
         )
         .select(*cols)
-        .orderBy("metric_name", "timestamp")
     )
 
 
@@ -184,8 +193,9 @@ def shape_response(
     unit: str | None = None,
 ) -> dict:
     """JSON shaping for one series (JSONBasicRollupsOutputSerializer.java:
-    55-151): values list ordered by timestamp; every stat null when
-    numPoints == 0 (:133-142); percentiles flatten to pct_<label>."""
+    55-151): values list in the order of `rows`, which callers pass
+    timestamp-ordered; every stat null when numPoints == 0 (:133-142);
+    percentiles flatten to pct_<label>."""
     values = []
     for r in rows:
         d = dict(r.asDict()) if hasattr(r, "asDict") else dict(r)
@@ -221,7 +231,8 @@ def series_frame_full(
 ) -> DataFrame:
     """FULL resolution = raw samples shaped like rollup points
     (BasicRollupsOutputSerializer convertRawSampleToObject: average/min/
-    max/sum echo the sample value, numPoints is 1, variance is 0)."""
+    max/sum echo the sample value, numPoints is 1, variance is 0).
+    Unordered, like series_frame."""
     chosen = effective_stats(stats, "basic")
     cols = [F.col("metric_name"), F.col("ts").alias("timestamp")]
     for s in chosen:
@@ -239,8 +250,11 @@ def series_frame_full(
             & (F.col("ts") < to_ms)
         )
         .select(*cols)
-        .orderBy("metric_name", "timestamp")
     )
+
+
+# O1: responses list values in timestamp order (the reference's TreeMap walk)
+_BY_TIME = itemgetter("timestamp")
 
 
 def lookup_rollup_type(catalog: DataFrame, tenant_id: str, metric_name: str) -> str:
@@ -316,7 +330,7 @@ def get_view(
             rollups, tenant_id, [metric_name], gran, params.from_ms, params.to_ms,
             params.stats, rollup_type,
         )
-    return shape_response(df.collect(), params.stats, unit)
+    return shape_response(sorted(df.collect(), key=_BY_TIME), params.stats, unit)
 
 
 def get_views_multi(
@@ -361,4 +375,7 @@ def get_views_multi(
     by_name: dict[str, list] = {m: [] for m in metric_names}
     for r in df.collect():
         by_name.setdefault(r["metric_name"], []).append(r)
-    return {m: shape_response(rows, params.stats) for m, rows in by_name.items()}
+    return {
+        m: shape_response(sorted(rows, key=_BY_TIME), params.stats)
+        for m, rows in by_name.items()
+    }

@@ -248,6 +248,32 @@ def test_embedding_near_dups_exact_multiblock(spark):
         assert math.isclose(got[p], want[p], rel_tol=1e-6)
 
 
+def test_embedding_near_dups_degrades_without_default_parallelism(spark, monkeypatch):
+    """The ≥16k-row block-count floor reads defaultParallelism; when that
+    read raises (Connect mode / API drift) the floor is skipped instead
+    of failing the operator."""
+    from pyspark import SparkContext
+
+    # while the parallelism is readable the floor applies: B=8 → 36 tiles on 32 cores
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda self: 32))
+    assert SIM._near_dup_block_count(spark, 20_000, 200_000) == 8
+    monkeypatch.undo()
+
+    rows = [(0, [1.0, 0.0]), (1, [1.0, 0.01]), (2, [0.0, 1.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def _raise(self):
+        raise RuntimeError("defaultParallelism unavailable")
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(_raise))
+    assert SIM._near_dup_block_count(spark, 20_000, 200_000) == 1
+    assert SIM._near_dup_block_count(spark, 500_000, 200_000) == 3
+    # end to end: a corpus counted past the floor threshold still plans and runs
+    monkeypatch.setattr(emb, "count", lambda: 20_000)
+    got = [(r["id_a"], r["id_b"]) for r in SIM.embedding_near_dups(emb, threshold=0.95).collect()]
+    assert got == [(0, 1)]
+
+
 def test_connected_components_clusters(spark):
     # chain 1-2-3, pair 10-11, singleton 99 → components {1,2,3}, {10,11}, {99}
     pairs = spark.createDataFrame(

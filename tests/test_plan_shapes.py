@@ -182,6 +182,48 @@ def test_histogram_quantile_is_one_aggregation(spark):
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan, plan[:2000]
 
 
+def test_series_frames_are_unsorted_single_job_scans(spark):
+    """Serve path: series_frame/series_frame_full are plain pruned
+    projections — no Sort, no shuffle Exchange (a global orderBy costs a
+    range-bounds sampling job plus an exchange per request) — and one
+    get_view request runs as exactly one Spark job; the time order is
+    applied to the collected rows on the driver."""
+    from pyspark.sql import functions as F
+
+    from blueflood_spark.operators import granularity as G
+    from blueflood_spark.plans import query_api as QA
+
+    # spark.range, not a local relation: its scan runs as a real job
+    raw = spark.range(600).select(
+        F.lit("t1").alias("tenant_id"), F.lit("m").alias("metric_name"),
+        (F.col("id") * 60_000).alias("ts"), F.col("id").cast("double").alias("value"),
+    )
+    rollups = spark.range(120).select(
+        F.lit("t1").alias("tenant_id"), F.lit("m").alias("metric_name"),
+        F.lit("5m").alias("resolution"), (F.col("id") * 300_000).alias("window_start"),
+        F.lit(5).cast("long").alias("num_points"), F.col("id").cast("double").alias("avg"),
+        F.col("id").cast("double").alias("sum"),
+    )
+    frames = [
+        QA.series_frame(rollups, "t1", ["m"], G.MIN_5, 0, 36_000_000, []),
+        QA.series_frame_full(raw, "t1", ["m"], 0, 36_000_000, []),
+    ]
+    for df in frames:
+        plan = _plan(spark, df)
+        assert _shuffles(plan) == 0, plan[:2000]
+        assert " Sort [" not in plan, plan[:2000]
+
+    sc = spark.sparkContext
+    params = QA.parse_params({"from": ["0"], "to": ["36000000"], "resolution": ["MIN5"]})
+    sc.setJobGroup("serve_one_view", "one get_view request")
+    try:
+        resp = QA.get_view(rollups, "t1", "m", params)
+    finally:
+        sc.setJobGroup(None, None)
+    assert resp["metadata"]["count"] == 120
+    assert len(sc.statusTracker().getJobIdsForGroup("serve_one_view")) == 1
+
+
 def test_pagerank_runs_as_one_job_with_lazy_marks(spark):
     """llm_dup_pagerank (r8): every checkpoint mark lands in the AQE-off
     loop-session clone, so plan CONSTRUCTION launches no jobs (under

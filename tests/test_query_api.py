@@ -175,3 +175,32 @@ def test_get_view_full_resolution_preagg_family_is_loud(spark):
     with _pytest.raises(QA.InvalidRequestError, match="preaggregated family 'counter'"):
         QA.get_views_multi(rollups, "t1", ["m.req"], params, rollup_type="counter",
                            now_ms=now, raw=raw)
+
+
+def test_responses_are_time_ordered_over_unordered_files(spark, tmp_path):
+    """O1: the frames carry no global sort, so get_view/get_views_multi
+    order the collected rows themselves. The fixtures are written as
+    several parquet files whose rows run in descending time, so a scan
+    returns them out of order."""
+    names = ["m.a", "m.b", "m.c"]
+    raw = spark.createDataFrame(
+        [("t1", m, i * MIN, float(i * (k + 1))) for k, m in enumerate(names) for i in range(120)],
+        "tenant_id string, metric_name string, ts long, value double",
+    )
+    rollups = R.basic_from_raw(raw, G.MIN_5).withColumn("resolution", F.lit("5m"))
+    raw_dir, rollups_dir = str(tmp_path / "raw"), str(tmp_path / "rollups")
+    raw.repartition(4).sortWithinPartitions(F.desc("ts")).write.parquet(raw_dir)
+    rollups.repartition(4).sortWithinPartitions(F.desc("window_start")).write.parquet(rollups_dir)
+    raw_p, rollups_p = spark.read.parquet(raw_dir), spark.read.parquet(rollups_dir)
+
+    def ascending(resp, n):
+        ts = [v["timestamp"] for v in resp["values"]]
+        assert len(ts) == n and all(a < b for a, b in zip(ts, ts[1:])), ts
+
+    for res, n in (("MIN5", 24), ("FULL", 120)):
+        p = Q.parse_params({"from": ["0"], "to": [str(120 * MIN)], "resolution": [res]})
+        ascending(Q.get_view(rollups_p, "t1", "m.b", p, raw=raw_p), n)
+        multi = Q.get_views_multi(rollups_p, "t1", names, p, raw=raw_p)
+        assert set(multi) == set(names)
+        for m in names:
+            ascending(multi[m], n)

@@ -50,6 +50,7 @@ def test_series_frame_full_raw_shape(spark):
         "tenant_id string, metric_name string, ts long, value double, unit string, ttl_seconds int",
     )
     out = series_frame_full(raw, "t1", ["m"], 0, 1000, ["average", "numPoints", "variance"]).collect()
+    out.sort(key=lambda r: r["timestamp"])  # the frame is unordered; responses sort on the driver
     assert len(out) == 2
     # raw sample echoes value as average, numPoints 1, variance 0 (serializer raw branch)
     assert out[0]["average"] == 7.0 and out[0]["numPoints"] == 1 and out[0]["variance"] == 0.0

@@ -42,7 +42,7 @@ CASES = {
     "q_trailing_week_revenue": "RANGE frame over the daily aggregate — window input bounded by calendar days, not lineitem",
     "q_grouping_sets": "custom grouping-set list via Expand: one scan, one shuffle, grouping_id disambiguation",
     "llm_source_overlap": "chunk-hash inverted index self-join — pair rows bounded by sources-per-chunk, never corpus²",
-    "api_get_view_frame": "§2.11 view endpoint's internal scan: resolution filter constant-folds the 5m∪20m∪60m ladder union — unselected branches pruned at plan time (the registered api_get_view query then flattens the shaped JSON, which is driver-side)",
+    "api_get_view_frame": "§2.11 view endpoint's internal scan: resolution filter constant-folds the 5m∪20m∪60m ladder union — unselected branches pruned at plan time; no Sort and no range-partitioning Exchange, since get_view orders the collected rows on the driver (the registered api_get_view query then flattens the shaped JSON, which is driver-side)",
     "llm_sq8_quantize": "int8 scalar quantization: pure map-only projection — the only Exchange is _t()'s single-row-group test-fixture fan-out, absent on real multi-split input",
     "llm_token_budget_mix": "token-budget mix: ONE semantic exchange (source key, for the per-source running sum); the scan-side Exchange is the test-fixture fan-out",
     "llm_multimodal_features": "PPM pixel decode inside one ArrowEvalPython/mapInPandas stage — no shuffle added around the Python boundary",
