@@ -8,9 +8,17 @@ ShardStateManager.java:369-409, RollupService.java:246-294,
 inputs/processors/BatchWriter.java:77-148) — collapses into:
 
 - ONE streaming topology: readStream → validation split → foreachBatch
-  {raw append + catalog upsert + delayed side-channel}. Checkpointing
-  replaces shard-state push/pull (S11); ~1500 LoC of scheduling machinery
-  becomes engine-provided state.
+  {raw append + catalog upsert + delayed side-channel + rejected}.
+  The async fan-out becomes concurrent sink writes: each micro-batch is
+  parsed and scanned ONCE into a cache, and its independent sinks are
+  written from that cache at the same time (`_write_sinks`), so a batch
+  costs about its slowest write, not the sum of all of them.
+  Checkpointing replaces shard-state push/pull (S11); ~1500 LoC of
+  scheduling machinery becomes engine-provided state.
+- The rollup writer (rollup + events) stays serial: on a 4-core box,
+  running its two writes concurrently as well gave the ingest stream no
+  gain (traced ingest batch 2.6 s, against 1.5 s with only the ingest
+  sinks concurrent), because both streams compete for the same cores.
 - Watermarked windowed aggregation in APPEND mode: a window is emitted
   once the watermark (= ROLLUP_DELAY_MILLIS, 5 min) passes — the same
   "wait for quiet, then finalize" contract as slot eligibility (T3).
@@ -22,6 +30,9 @@ inputs/processors/BatchWriter.java:77-148) — collapses into:
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,7 +77,46 @@ def discovery_upsert(batch: DataFrame, catalog_path: str) -> None:
         # anti-join and duplicate the catalog every batch
         if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
             raise
-    new_locs.write.mode("append").parquet(catalog_path)
+    # append only when the anti-join left something: an empty append still
+    # writes a schema-only file, and every later anti-join and catalog
+    # search would have to list one such file per micro-batch
+    new_locs = new_locs.cache()
+    try:
+        if not new_locs.isEmpty():
+            new_locs.write.mode("append").parquet(catalog_path)
+    finally:
+        new_locs.unpersist()
+
+
+def _write_sinks(cached: DataFrame, writes: list[Callable[[], None]]) -> None:
+    """Run a micro-batch's independent sink writes concurrently, one
+    thread per write, all reading the micro-batch's `cached` frame — the
+    reference's async processor fan-out (Processor.apply hands a batch to
+    the discovery and batch writers at once).
+
+    Each write is wrapped on its own by inheritable_thread_target(session),
+    which clones the stream thread's local properties per wrap: every
+    thread carries the query's run-id job group (stop() cancels sink
+    jobs) and gets its own SQL execution id. One shared wrapper would give
+    all threads the same Properties object, and concurrent writes would
+    overwrite each other's execution id. The session form also works
+    under Spark Connect.
+
+    Every write finishes before the first failure (in `writes` order) is
+    raised, so no write of a failed attempt is still running when the
+    replay starts; `cached` is unpersisted only after that."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    session = cached.sparkSession
+    try:
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            futures = [pool.submit(inheritable_thread_target(session)(w)) for w in writes]
+        for f in futures:
+            f.result()
+    finally:
+        cached.unpersist()
 
 
 def start_ingest(
@@ -84,7 +134,12 @@ def start_ingest(
     clock, split valid/rejected, append raw, side-channel delayed rows
     (P2/S8), and (when catalog_path is given) upsert NEW locators to the
     discovery catalog behind the P7 cache filter. foreachBatch gives us
-    the multi-sink fan-out the reference implements with async processors.
+    the multi-sink fan-out the reference implements with async processors:
+    the parsed micro-batch is cached once, valid and rejected both come
+    from that cache (the source is scanned once, not once per sink), and
+    the raw, delayed, rejected and catalog writes run concurrently through
+    `_write_sinks`. The batch therefore costs about its slowest write
+    instead of the sum of four write jobs.
 
     dedup=True drops duplicate samples (same locator + collection time)
     across the stream via dropDuplicatesWithinWatermark — the streaming
@@ -103,8 +158,8 @@ def start_ingest(
         import time
 
         now_ms = int(time.time() * 1000)
+        batch = batch.cache()
         valid, rejected = validate(batch, now_ms)
-        valid = valid.cache()
         # foreachBatch is at-least-once: a replay re-runs with the SAME
         # batch_id but a LATER wall clock, and validation/delay routing
         # are clock-dependent — a row can change sinks between attempts.
@@ -117,28 +172,35 @@ def start_ingest(
         # all three sinks. The discovery upsert is idempotent by
         # construction: its left-anti join filters out locators a
         # previous attempt already appended.
-        (
-            valid.withColumn("date", F.to_date(F.timestamp_millis(F.col("ts"))))
-            .write.partitionBy("date")
-            .mode("overwrite")
-            .parquet(f"{raw_path}/batch_id={batch_id}")
-        )
-        delayed = valid.filter(F.col("ts") < F.lit(now_ms - ROLLUP_DELAY_MS))
-        # record the affected 20m slot per delayed locator (S8: DELAYED_METRICS_REROLL_GRANULARITY)
-        (
-            delayed.select(
-                "tenant_id",
-                "metric_name",
-                R.window_start(F.col("ts"), G.MIN_20).alias("slot_window_start"),
+        def write_raw() -> None:
+            (
+                valid.withColumn("date", F.to_date(F.timestamp_millis(F.col("ts"))))
+                .write.partitionBy("date")
+                .mode("overwrite")
+                .parquet(f"{raw_path}/batch_id={batch_id}")
             )
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(f"{delayed_path}/batch_id={batch_id}")
-        )
-        rejected.write.mode("overwrite").parquet(f"{rejected_path}/batch_id={batch_id}")
+
+        def write_delayed() -> None:
+            delayed = valid.filter(F.col("ts") < F.lit(now_ms - ROLLUP_DELAY_MS))
+            # record the affected 20m slot per delayed locator (S8: DELAYED_METRICS_REROLL_GRANULARITY)
+            (
+                delayed.select(
+                    "tenant_id",
+                    "metric_name",
+                    R.window_start(F.col("ts"), G.MIN_20).alias("slot_window_start"),
+                )
+                .distinct()
+                .write.mode("overwrite")
+                .parquet(f"{delayed_path}/batch_id={batch_id}")
+            )
+
+        def write_rejected() -> None:
+            rejected.write.mode("overwrite").parquet(f"{rejected_path}/batch_id={batch_id}")
+
+        writes = [write_raw, write_delayed, write_rejected]
         if catalog_path is not None:
-            discovery_upsert(valid, catalog_path)
-        valid.unpersist()
+            writes.append(lambda: discovery_upsert(valid, catalog_path))
+        _write_sinks(batch, writes)
 
     writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint)
     if available_now:
@@ -415,7 +477,10 @@ def start_preagg_ingest(
     route_by_type (P4) fans each family out to its own table — the
     metrics_preaggregated_full equivalents (CassandraModel.java:68-80).
     Same topology contract as start_ingest: one stream, foreachBatch
-    multi-sink fan-out, checkpointed exactly-once per sink directory."""
+    multi-sink fan-out, checkpointed exactly-once per sink directory. The
+    normalized batch is cached once, and the delayed sink, the four
+    family tables and the catalog are written from it concurrently
+    through `_write_sinks`."""
     from blueflood_spark.sources.ingest import (
         AGGREGATED_PAYLOAD,
         normalize_aggregated,
@@ -429,7 +494,8 @@ def start_preagg_ingest(
 
         now_ms = int(time.time() * 1000)
         preagg = normalize_aggregated(batch).cache()
-        if delayed_path is not None:
+
+        def write_delayed() -> None:
             # T4 for the preagg families (r7 verdict task 9): a flush
             # whose timestamp predates the rollup delay lands AFTER its
             # window was rolled — record the affected (locator, family,
@@ -448,9 +514,10 @@ def start_preagg_ingest(
                 .write.mode("overwrite")
                 .parquet(f"{delayed_path}/batch_id={batch_id}")
             )
+
         # batch_id-keyed dynamic overwrite per family sink: replays of the
         # same micro-batch rewrite their own partitions (see start_ingest)
-        for family, df in route_by_type(preagg).items():
+        def write_family(family: str, df: DataFrame) -> None:
             (
                 df.withColumn("date", F.to_date(F.timestamp_millis(F.col("ts"))))
                 .withColumn("batch_id", F.lit(batch_id))
@@ -459,9 +526,13 @@ def start_preagg_ingest(
                 .mode("overwrite")
                 .parquet(f"{tables_dir}/preagg_{family}")
             )
+
+        writes = [write_delayed] if delayed_path is not None else []
+        writes += [partial(write_family, fam, df) for fam, df in route_by_type(preagg).items()]
         if catalog_path is not None:
-            discovery_upsert(preagg.withColumn("unit", F.lit(None).cast("string")), catalog_path)
-        preagg.unpersist()
+            locs = preagg.withColumn("unit", F.lit(None).cast("string"))
+            writes.append(lambda: discovery_upsert(locs, catalog_path))
+        _write_sinks(preagg, writes)
 
     writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint)
     if available_now:

@@ -2,7 +2,9 @@
 rollup → late-data re-roll (SURVEY §2.9 T1-T5, mirroring the reference's
 integration tests ingest→rollup→query)."""
 
+import glob
 import json
+import os
 import time
 
 import pytest
@@ -60,6 +62,9 @@ def test_ingest_to_rollup_end_to_end(spark, dirs):
         spark, dirs["input"], dirs["raw"], dirs["rejected"], dirs["delayed"], dirs["ckpt_ingest"]
     )
     q.awaitTermination(120)
+    # valid and rejected both come from the one cached micro-batch: the
+    # source is scanned once, so it reports each payload row once
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(rows)
 
     raw = spark.read.parquet(dirs["raw"])
     assert raw.count() == 13  # 12 samples + 1 very-late; invalid row excluded
@@ -201,6 +206,21 @@ def test_discovery_upsert_no_reupsert(spark, dirs, tmp_path):
     cat = spark.read.parquet(catalog)
     assert cat.count() == 3  # svc.cpu NOT re-upserted
     assert cat.groupBy("tenant_id", "metric_name").count().filter("count > 1").count() == 0
+
+    # batch 3: known locators only — nothing to append, so no new file
+    # (an empty append would still add a schema-only parquet file)
+    files_before = sorted(glob.glob(f"{catalog}/**/*.parquet", recursive=True))
+    rows3 = [
+        sample("t1", "svc.cpu", now - 20_000, 5.0),
+        sample("t1", "svc.disk", now - 20_000, 6.0),
+    ]
+    write_payload(f"{dirs['input']}/b3.json", rows3)
+    P.start_ingest(
+        spark, dirs["input"], dirs["raw"], dirs["rejected"], dirs["delayed"],
+        dirs["ckpt_ingest"], catalog_path=catalog,
+    ).awaitTermination(120)
+    assert sorted(glob.glob(f"{catalog}/**/*.parquet", recursive=True)) == files_before
+    assert spark.read.parquet(catalog).count() == 3
 
 
 def test_rollup_event_emission(spark, dirs, tmp_path):
@@ -356,6 +376,70 @@ def test_ingest_replay_is_idempotent(spark, dirs):
     raw = spark.read.parquet(dirs["raw"])
     assert raw.count() == 6  # NOT 12: replay overwrote batch_id=0
     assert spark.read.parquet(dirs["rejected"]).count() == 1
+
+
+def test_ingest_failed_sink_replays_cleanly(spark, dirs, tmp_path):
+    """Crash injection for the ingest sinks: the rejected sink is
+    unwritable on the first attempt (a regular file sits at its path), so
+    the micro-batch fails AFTER its other sinks, written concurrently,
+    have finished. A restart on the same checkpoint replays batch_id=0:
+    raw holds the valid rows once, rejected the invalid ones, and the
+    catalog one row per locator."""
+    from pyspark.errors import StreamingQueryException
+
+    catalog = str(tmp_path / "catalog")
+    now = int(time.time() * 1000)
+    valid = [sample("t1", f"svc.crash{i % 3}", now - 60_000 - i * 1000, float(i)) for i in range(6)]
+    invalid = [sample("t1", "", now, 1.0), sample("", "svc.crash0", now, 2.0)]
+    write_payload(f"{dirs['input']}/crash.json", valid + invalid)
+    with open(dirs["rejected"], "w") as f:
+        f.write("blocker")
+
+    def run():
+        P.start_ingest(
+            spark, dirs["input"], dirs["raw"], dirs["rejected"], dirs["delayed"],
+            dirs["ckpt_ingest"], catalog_path=catalog,
+        ).awaitTermination(120)
+
+    with pytest.raises(StreamingQueryException) as err:
+        run()
+    assert "rejected" in str(err.value)
+    # the concurrent writes all finished before the failure surfaced
+    assert spark.read.parquet(dirs["raw"]).count() == len(valid)
+    assert spark.read.parquet(catalog).count() == 3
+
+    os.remove(dirs["rejected"])
+    run()
+    raw = spark.read.parquet(dirs["raw"])
+    got = sorted((r["metric_name"], r["ts"], r["value"]) for r in raw.collect())
+    expect = sorted((r["metricName"], r["collectionTime"], r["metricValue"]) for r in valid)
+    assert got == expect  # the replay overwrote batch_id=0, not doubled it
+    rejected = spark.read.parquet(dirs["rejected"])
+    assert sorted(r["error"] for r in rejected.collect()) == ["missing metricName", "missing tenantId"]
+    cat = spark.read.parquet(catalog)
+    assert cat.count() == 3
+    assert cat.groupBy("tenant_id", "metric_name").count().filter("count > 1").count() == 0
+
+
+def test_ingest_sink_jobs_stay_in_query_job_group(spark, dirs, tmp_path):
+    """The concurrent sink writes inherit the stream thread's local
+    properties: every Spark job an ingest run launches — writes, the
+    catalog read and its anti-join — carries the query's run-id job
+    group, so stop() can cancel it. Two runs, so the second one also
+    reads an existing catalog."""
+    catalog = str(tmp_path / "catalog")
+    now = int(time.time() * 1000)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    for i in range(2):
+        rows = [sample("t1", f"svc.grp{i}", now - 60_000 - k * 1000, 1.0) for k in range(3)]
+        write_payload(f"{dirs['input']}/grp{i}.json", rows + [sample("t1", "", now, 1.0)])
+        P.start_ingest(
+            spark, dirs["input"], dirs["raw"], dirs["rejected"], dirs["delayed"],
+            dirs["ckpt_ingest"], catalog_path=catalog,
+        ).awaitTermination(120)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert spark.read.parquet(catalog).count() == 2
 
 
 def test_session_stream_matches_batch_session_window(spark, tmp_path):

@@ -24,7 +24,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from blueflood_spark.session import get_spark  # noqa: E402
 from blueflood_spark.sources import ingest as I  # noqa: E402

@@ -15,7 +15,8 @@ from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as E  # noqa: E402
 

@@ -10,7 +10,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as E  # noqa: E402
 from blueflood_spark.session import get_spark  # noqa: E402

@@ -22,7 +22,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # Disposition per known payer (r9 verdict task 4): WHY the jobs are
 # there and whether they are deliberate. Classes:

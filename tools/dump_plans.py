@@ -6,10 +6,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as E  # noqa: E402
 from blueflood_spark.session import get_spark  # noqa: E402
@@ -166,7 +168,7 @@ def main() -> None:
     for name, why in CASES.items():
         df = qs[name](spark, SF)
         out.append(f"## {name}\n\n*{why}*\n\n```\n{plan_of(df)}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

@@ -19,7 +19,7 @@ does:
   pairwise-distance distribution within a copy, decorrelates across
   copies.
 
-Output: /root/repo/testdata_sf1/*.parquet (gitignored).
+Output: <repo>/testdata_sf1/*.parquet (gitignored).
 """
 
 from __future__ import annotations
@@ -28,7 +28,8 @@ import os
 import string
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
@@ -36,7 +37,7 @@ import __spark_entry__ as E  # noqa: E402
 from blueflood_spark.session import get_spark  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/testdata_sf1"
+DST = os.path.join(REPO, "testdata_sf1")
 COPIES = 10
 
 

@@ -11,16 +11,19 @@ Emits a markdown table on stdout (pasted into SCALING.md).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as E  # noqa: E402
 from blueflood_spark.session import get_spark  # noqa: E402
+from gen_sf1 import DST, SRC  # noqa: E402
 
-SFS = [("sf0.1", "/root/testdata/sf0.1"), ("sf1", "/root/repo/testdata_sf1")]
+SFS = [("sf0.1", SRC), ("sf1", DST)]
 
 DEFAULT = [
     "q01_pricing_summary",
