@@ -69,6 +69,38 @@ def _grouped(df: DataFrame, gran: G.Granularity, ts_col: str, keys: Sequence[str
     )
 
 
+def _basic_moments(v: Column) -> list[Column]:
+    """The basic rollup's 7 aggregates of a raw value column (A1, see
+    basic_from_raw), in sink order."""
+    return [
+        F.count(v).alias("num_points"),
+        F.avg(v).alias("avg"),
+        F.var_pop(v).alias("var_pop"),
+        F.min(v).alias("min"),
+        F.max(v).alias("max"),
+        F.sum(v).alias("sum"),
+        F.sum(v * v).alias("sum_sq"),
+    ]
+
+
+def _merged_moments() -> list[Column]:
+    """The same 7 aggregates merged from finer rollups (A2, see
+    basic_merge): three plain sums plus two divisions at output."""
+    total_n = F.sum("num_points")
+    sx = F.sum("sum")
+    sxx = F.sum("sum_sq")
+    avg = safe_div(sx, total_n)
+    return [
+        total_n.alias("num_points"),
+        avg.alias("avg"),
+        F.greatest(F.lit(0.0), safe_div(sxx, total_n) - avg * avg).alias("var_pop"),
+        F.min("min").alias("min"),
+        F.max("max").alias("max"),
+        sx.alias("sum"),
+        sxx.alias("sum_sq"),
+    ]
+
+
 def basic_from_raw(
     df: DataFrame,
     gran: G.Granularity,
@@ -81,18 +113,9 @@ def basic_from_raw(
     Also emits sum_sq = Σx² so coarser merges (A2) can pool variance from
     exact moments instead of recomposing E[x²] from (avg, var) children.
     """
-    v = F.col(value_col)
     return (
         _grouped(df, gran, ts_col, keys)
-        .agg(
-            F.count(v).alias("num_points"),
-            F.avg(v).alias("avg"),
-            F.var_pop(v).alias("var_pop"),
-            F.min(v).alias("min"),
-            F.max(v).alias("max"),
-            F.sum(v).alias("sum"),
-            F.sum(v * v).alias("sum_sq"),
-        )
+        .agg(*_basic_moments(F.col(value_col)))
         .withColumn("resolution", F.lit(gran.name))
     )
 
@@ -110,24 +133,11 @@ def basic_merge(
       avg = Σx / N ;  var = max(0, Σx² / N − avg²)
     Count-weighted mean Σnᵢavgᵢ/N equals Σx/N exactly when avgᵢ = Σxᵢ/nᵢ.
     """
-    total_n = F.sum("num_points")
-    sx = F.sum("sum")
-    sxx = F.sum("sum_sq")
-    avg = safe_div(sx, total_n)
-    merged = (
+    return (
         _grouped(partials, gran, "window_start", keys)
-        .agg(
-            total_n.alias("num_points"),
-            avg.alias("avg"),
-            F.greatest(F.lit(0.0), safe_div(sxx, total_n) - avg * avg).alias("var_pop"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            sx.alias("sum"),
-            sxx.alias("sum_sq"),
-        )
+        .agg(*_merged_moments())
         .withColumn("resolution", F.lit(gran.name))
     )
-    return merged
 
 
 def cascade(
@@ -227,16 +237,7 @@ def gauge_from_raw(
     latest = F.max(F.struct(ts.alias("ts"), v.alias("value")))
     return (
         _grouped(df, gran, ts_col, keys)
-        .agg(
-            F.count(v).alias("num_points"),
-            F.avg(v).alias("avg"),
-            F.var_pop(v).alias("var_pop"),
-            F.min(v).alias("min"),
-            F.max(v).alias("max"),
-            F.sum(v).alias("sum"),
-            F.sum(v * v).alias("sum_sq"),
-            latest.alias("_latest"),
-        )
+        .agg(*_basic_moments(v), latest.alias("_latest"))
         .select(
             *keys,
             "window_start",
@@ -338,18 +339,11 @@ def basic_from_raw_salted(
     (AQE's skew-join handling doesn't cover aggregations, so this is the
     explicit fallback when one group overwhelms a task.)
     """
-    v = F.col(value_col)
     salted = df.withColumn("window_start", window_start(F.col(ts_col), gran)).withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(ts_col)), F.lit(salt_buckets))
     )
     partials = salted.groupBy(*keys, "window_start", "_salt").agg(
-        F.count(v).alias("num_points"),
-        F.avg(v).alias("avg"),
-        F.var_pop(v).alias("var_pop"),
-        F.min(v).alias("min"),
-        F.max(v).alias("max"),
-        F.sum(v).alias("sum"),
-        F.sum(v * v).alias("sum_sq"),
+        *_basic_moments(F.col(value_col))
     )
     return basic_merge(partials.drop("_salt"), gran, keys)
 
@@ -362,20 +356,10 @@ def gauge_merge(
     """A6 GaugeFromGauge: basic-stat merge (exact moments, see basic_merge)
     + latest carried as the max (ts, value) struct across children
     (BluefloodGaugeRollup.java:64-96)."""
-    total_n = F.sum("num_points")
-    sx = F.sum("sum")
-    sxx = F.sum("sum_sq")
-    avg = safe_div(sx, total_n)
     return (
         _grouped(partials, gran, "window_start", keys)
         .agg(
-            total_n.alias("num_points"),
-            avg.alias("avg"),
-            F.greatest(F.lit(0.0), safe_div(sxx, total_n) - avg * avg).alias("var_pop"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            sx.alias("sum"),
-            sxx.alias("sum_sq"),
+            *_merged_moments(),
             F.max(F.struct(F.col("latest_ts").alias("ts"), F.col("latest_value").alias("value"))).alias(
                 "_latest"
             ),

@@ -108,10 +108,11 @@ _LOOP_CONF_COPY = (
 _LOOP_TOKEN_KEY = "spark.blueflood.loop.token"
 _LOOP_CLONE_MARKER = "spark.blueflood.loop.clone"
 # the PARENT's configured shuffle width, stamped on the clone at every
-# loop_session(parent) access: fitted_loop_width restores from THIS, not
-# from a pre-loop read of the live value — two loops interleaving their
-# set/restore on the shared clone can otherwise capture each other's
-# fitted width and leave it installed after both finish (r10 ADVICE)
+# loop_session(parent) access: fitted_loop_width restores from THIS and
+# fit_loop_width caps at it, not at a read of the live value — two loops
+# interleaving their set/restore on the shared clone can otherwise
+# capture each other's fitted width and leave it installed after both
+# finish (r10 ADVICE)
 _LOOP_PARENT_WIDTH_KEY = "spark.blueflood.loop.parentWidth"
 
 
@@ -203,7 +204,11 @@ def fit_loop_width(n_rows: int, session: SparkSession) -> int | None:
     Width = ceil(n_rows / rowsPerPartition) clamped to [1, conf width]:
     at corpus scale the clamp returns the CONFIGURED width unchanged —
     the production setting stays authoritative, exactly like AQE
-    coalescing which only ever merges below-target partitions. The row
+    coalescing which only ever merges below-target partitions. On a loop
+    clone the conf width is the parent's stamped width
+    (_LOOP_PARENT_WIDTH_KEY), not the clone's live value: a concurrent
+    loop may have installed its own tiny fitted width there, and capping
+    at that would hold this whole loop at it. The row
     target is conf-tunable (spark.blueflood.loop.rowsPerPartition).
     Loop results are width-independent (integer min/sum fixpoints; the
     SPARK_GRAFT_SHUFFLE=3 oracle arm proves it), so a mis-fit can only
@@ -215,7 +220,10 @@ def fit_loop_width(n_rows: int, session: SparkSession) -> int | None:
     whatever the session actually had (r10 ADVICE; the old fallback
     silently wrote a hardcoded 200)."""
     try:
-        conf_width = int(session.conf.get("spark.sql.shuffle.partitions"))
+        conf_width = int(
+            session.conf.get(_LOOP_PARENT_WIDTH_KEY, "")
+            or session.conf.get("spark.sql.shuffle.partitions")
+        )
     except Exception:  # pragma: no cover - Connect mode / API drift
         return None
     try:
@@ -250,7 +258,11 @@ def fitted_loop_width(child: SparkSession, n_rows: int):
       installed after both finish. Mid-flight a concurrent loop may
       still plan at this loop's fitted width — perf-only by design
       (fixpoint results are width-independent, SPARK_GRAFT_SHUFFLE=3
-      oracle arm)."""
+      oracle arm).
+
+    Nesting fitted scopes on one clone is unsupported: the inner scope's
+    exit restores the parent's width, so the outer scope would plan its
+    remaining rounds at that width instead of its own fit."""
     width_key = "spark.sql.shuffle.partitions"
     try:
         is_clone = child.conf.get(_LOOP_CLONE_MARKER, "") == "true"

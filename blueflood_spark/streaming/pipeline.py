@@ -8,13 +8,29 @@ ShardStateManager.java:369-409, RollupService.java:246-294,
 inputs/processors/BatchWriter.java:77-148) — collapses into:
 
 - ONE streaming topology: readStream → validation split → foreachBatch
-  {raw append + catalog upsert + delayed side-channel + rejected}.
+  {raw + delayed side-channel + rejected + catalog upsert}.
   The async fan-out becomes concurrent sink writes: each micro-batch is
   parsed and scanned ONCE into a cache, and its independent sinks are
   written from that cache at the same time (`_write_sinks`), so a batch
   costs about its slowest write, not the sum of all of them.
   Checkpointing replaces shard-state push/pull (S11); ~1500 LoC of
   scheduling machinery becomes engine-provided state.
+- ONE sink rule for every stream, in place of the reference's same-key
+  Cassandra overwrite (T7). foreachBatch is at-least-once: a crash
+  between the writes and the checkpoint commit replays the micro-batch
+  with the SAME batch_id. Every foreachBatch write therefore goes
+  through `_overwrite_batch`, a static overwrite of
+  `<sink>/batch_id=<id>` even when the frame is empty, so a replay
+  rewrites its own directories instead of adding a second copy (the
+  idempotent-sink recipe of Structured Streaming, SIGMOD 2018). The one
+  exception is the discovery catalog, whose left-anti join makes its
+  append idempotent. Stateful operators whose output is append-only
+  (slot tracker, sessions, interval join, alert, CUSUM) keep Spark's
+  file sink, whose commit log is exactly-once by itself. Readers see
+  each foreachBatch sink as a table partitioned by batch_id; spark.read
+  infers that column as INT from the directory names, so pin it with an
+  explicit schema where the long type matters downstream. Every stream
+  starts through `_start`.
 - The rollup writer (rollup + events) stays serial: on a 4-core box,
   running its two writes concurrently as well gave the ingest stream no
   gain (traced ingest batch 2.6 s, against 1.5 s with only the ingest
@@ -35,6 +51,7 @@ from collections.abc import Callable
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -88,6 +105,33 @@ def discovery_upsert(batch: DataFrame, catalog_path: str) -> None:
         new_locs.unpersist()
 
 
+def _start(writer: DataStreamWriter, checkpoint: str, available_now: bool) -> StreamingQuery:
+    """Start a stream on its checkpoint. available_now=True processes the
+    input present at start and stops (tests); False runs until stopped."""
+    writer = writer.option("checkpointLocation", checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _overwrite_batch(
+    df: DataFrame, path: str, batch_id: int, partition_by: str | None = None
+) -> None:
+    """The sink rule (module docstring): statically overwrite
+    `<path>/batch_id=<batch_id>`, even when `df` is empty. A replay runs
+    with the same batch_id but a LATER wall clock, and ingest's
+    validation and delay routing read that clock, so a row can change
+    sinks between attempts. Rewriting every sink's whole directory on
+    every attempt removes it from its old sink; a dynamic overwrite of
+    the `partition_by` partitions, or skipping empty frames, would leave
+    the first attempt's rows in place. The overwrite mode is pinned so a
+    session-wide dynamic setting cannot change that."""
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(f"{path.rstrip('/')}/batch_id={batch_id}")
+
+
 def _write_sinks(cached: DataFrame, writes: list[Callable[[], None]]) -> None:
     """Run a micro-batch's independent sink writes concurrently, one
     thread per write, all reading the micro-batch's `cached` frame — the
@@ -119,6 +163,20 @@ def _write_sinks(cached: DataFrame, writes: list[Callable[[], None]]) -> None:
         cached.unpersist()
 
 
+# the raw sink's layout as start_ingest writes it: the payload columns,
+# then the batch_id and date partition columns
+RAW_SINK_SCHEMA = (
+    "tenant_id string, metric_name string, ts long, value double, unit string,"
+    " ttl_seconds int, batch_id long, date date"
+)
+
+
+def read_raw_stream(spark: SparkSession, raw_path: str) -> DataFrame:
+    """The raw sink as a stream: the source of the rollup, slot-tracker,
+    alert, CUSUM and sketch streams."""
+    return spark.readStream.schema(RAW_SINK_SCHEMA).parquet(raw_path)
+
+
 def start_ingest(
     spark: SparkSession,
     input_path: str,
@@ -131,7 +189,7 @@ def start_ingest(
     catalog_path: str | None = None,
 ):
     """Ingest topology via foreachBatch: validate (P1) with the batch-time
-    clock, split valid/rejected, append raw, side-channel delayed rows
+    clock, split valid/rejected, write raw, side-channel delayed rows
     (P2/S8), and (when catalog_path is given) upsert NEW locators to the
     discovery catalog behind the P7 cache filter. foreachBatch gives us
     the multi-sink fan-out the reference implements with async processors:
@@ -160,52 +218,37 @@ def start_ingest(
         now_ms = int(time.time() * 1000)
         batch = batch.cache()
         valid, rejected = validate(batch, now_ms)
-        # foreachBatch is at-least-once: a replay re-runs with the SAME
-        # batch_id but a LATER wall clock, and validation/delay routing
-        # are clock-dependent — a row can change sinks between attempts.
-        # Each sink therefore STATIC-overwrites its whole batch_id=N
-        # directory UNCONDITIONALLY (empty frames included): the replay
-        # rewrites every sink's view of the batch, so a row re-routed on
-        # retry cannot survive in its old sink (dynamic overwrite — or a
-        # skip-when-empty guard — would leave the first attempt's stale
-        # partitions in place). Last attempt wins, consistently across
-        # all three sinks. The discovery upsert is idempotent by
-        # construction: its left-anti join filters out locators a
+        # validation and delay routing read the clock, so a replay may
+        # route a row differently: every sink rewrites its batch_id
+        # directory (_overwrite_batch). The discovery upsert is idempotent
+        # by construction: its left-anti join filters out locators a
         # previous attempt already appended.
-        def write_raw() -> None:
-            (
-                valid.withColumn("date", F.to_date(F.timestamp_millis(F.col("ts"))))
-                .write.partitionBy("date")
-                .mode("overwrite")
-                .parquet(f"{raw_path}/batch_id={batch_id}")
-            )
-
-        def write_delayed() -> None:
-            delayed = valid.filter(F.col("ts") < F.lit(now_ms - ROLLUP_DELAY_MS))
+        writes = [
+            lambda: _overwrite_batch(
+                valid.withColumn("date", F.to_date(F.timestamp_millis(F.col("ts")))),
+                raw_path,
+                batch_id,
+                partition_by="date",
+            ),
             # record the affected 20m slot per delayed locator (S8: DELAYED_METRICS_REROLL_GRANULARITY)
-            (
-                delayed.select(
+            lambda: _overwrite_batch(
+                valid.filter(F.col("ts") < F.lit(now_ms - ROLLUP_DELAY_MS))
+                .select(
                     "tenant_id",
                     "metric_name",
                     R.window_start(F.col("ts"), G.MIN_20).alias("slot_window_start"),
                 )
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(f"{delayed_path}/batch_id={batch_id}")
-            )
-
-        def write_rejected() -> None:
-            rejected.write.mode("overwrite").parquet(f"{rejected_path}/batch_id={batch_id}")
-
-        writes = [write_raw, write_delayed, write_rejected]
+                .distinct(),
+                delayed_path,
+                batch_id,
+            ),
+            lambda: _overwrite_batch(rejected, rejected_path, batch_id),
+        ]
         if catalog_path is not None:
             writes.append(lambda: discovery_upsert(valid, catalog_path))
         _write_sinks(batch, writes)
 
-    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(process), checkpoint, available_now)
 
 
 def start_streaming_rollup(
@@ -228,28 +271,16 @@ def start_streaming_rollup(
     hook external consumers (the reference's Esper/event feeds) subscribe
     to. Emission rides the same foreachBatch as the rollup write, so an
     event exists iff its rollup batch committed."""
-    raw = spark.readStream.schema(
-        "tenant_id string, metric_name string, ts long, value double, unit string,"
-        " ttl_seconds int, batch_id long, date date"
-    ).parquet(raw_path)
-    ts = F.timestamp_millis(F.col("ts"))
     agg = (
-        raw.withColumn("event_time", ts)
+        read_raw_stream(spark, raw_path)
+        .withColumn("event_time", F.timestamp_millis(F.col("ts")))
         .withWatermark("event_time", f"{delay_ms // 1000} seconds")
         .groupBy(
             F.window("event_time", f"{gran.milliseconds // 1000} seconds"),
             "tenant_id",
             "metric_name",
         )
-        .agg(
-            F.count("value").alias("num_points"),
-            F.avg("value").alias("avg"),
-            F.var_pop("value").alias("var_pop"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.sum("value").alias("sum"),
-            F.sum(F.col("value") * F.col("value")).alias("sum_sq"),
-        )
+        .agg(*R._basic_moments(F.col("value")))
         .select(
             "tenant_id",
             "metric_name",
@@ -264,52 +295,26 @@ def start_streaming_rollup(
             "sum_sq",
         )
     )
-    if events_path is None:
-        writer = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", rollup_path)
-            .option("checkpointLocation", checkpoint)
-        )
-    else:
 
-        def write_with_events(batch: DataFrame, batch_id: int) -> None:
-            # foreachBatch is at-least-once: a crash between task success
-            # and checkpoint commit REPLAYS the batch with the SAME
-            # batch_id. Both writes therefore go to batch_id-keyed
-            # partition directories in OVERWRITE mode — a replay rewrites
-            # its own partition instead of appending duplicates, making
-            # the pair effectively exactly-once (the standard foreachBatch
-            # idempotence recipe). Readers see a table partitioned by
-            # batch_id at each root.
-            # NOTE the two modes use different sink layouts: events_path=
-            # None uses the streaming file sink (_spark_metadata commit
-            # log) — never point both modes at the same rollup_path. A
-            # pre-existing flat/append-mode output directory must be
-            # migrated (or a fresh path used) before switching modes —
-            # mixed layouts under one root double-read on scan. Also:
-            # batch_id here is a PARTITION column, so spark.read infers it
-            # as INT from the directory names (pin with an explicit schema
-            # if the long type matters downstream).
-            import time
+    def write(batch: DataFrame, batch_id: int) -> None:
+        import time
 
-            batch = batch.cache()
-            batch.write.mode("overwrite").parquet(f"{rollup_path}/batch_id={batch_id}")
-            batch.select(
+        batch = batch.cache()
+        _overwrite_batch(batch, rollup_path, batch_id)
+        if events_path is not None:
+            events = batch.select(
                 "tenant_id",
                 "metric_name",
                 "window_start",
                 "resolution",
                 F.lit(int(time.time() * 1000)).alias("emitted_at_ms"),
-            ).write.mode("overwrite").parquet(f"{events_path}/batch_id={batch_id}")
-            batch.unpersist()
+            )
+            _overwrite_batch(events, events_path, batch_id)
+        batch.unpersist()
 
-        writer = agg.writeStream.outputMode("append").foreachBatch(write_with_events).option(
-            "checkpointLocation", checkpoint
-        )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(
+        agg.writeStream.outputMode("append").foreachBatch(write), checkpoint, available_now
+    )
 
 
 def start_slot_tracker(
@@ -335,11 +340,9 @@ def start_slot_tracker(
     checkpoint (≈ the reference's 60 s poll cycle)."""
     import pandas as pd
 
-    raw = spark.readStream.schema(
-        "tenant_id string, metric_name string, ts long, value double, unit string,"
-        " ttl_seconds int, batch_id long, date date"
-    ).parquet(raw_path)
-    slotted = raw.withColumn("slot_window_start", R.window_start(F.col("ts"), gran))
+    slotted = read_raw_stream(spark, raw_path).withColumn(
+        "slot_window_start", R.window_start(F.col("ts"), gran)
+    )
 
     out_schema = (
         "tenant_id string, metric_name string, slot_window_start long,"
@@ -390,15 +393,11 @@ def start_slot_tracker(
         outputMode="append",
         timeoutConf="ProcessingTimeTimeout",
     )
-    writer = (
-        eligible.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", slots_out_path)
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        eligible.writeStream.outputMode("append").format("parquet").option("path", slots_out_path),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def reroll(
@@ -476,11 +475,11 @@ def start_preagg_ingest(
     them to flat preagg rows (PreaggregateConversions.java:48-129), and
     route_by_type (P4) fans each family out to its own table — the
     metrics_preaggregated_full equivalents (CassandraModel.java:68-80).
-    Same topology contract as start_ingest: one stream, foreachBatch
-    multi-sink fan-out, checkpointed exactly-once per sink directory. The
-    normalized batch is cached once, and the delayed sink, the four
-    family tables and the catalog are written from it concurrently
-    through `_write_sinks`."""
+    Same topology as start_ingest: one stream, foreachBatch multi-sink
+    fan-out. The normalized batch is cached once, and the delayed sink,
+    the four family tables (partitioned by date inside each batch_id
+    directory) and the catalog are written from it concurrently through
+    `_write_sinks`."""
     from blueflood_spark.sources.ingest import (
         AGGREGATED_PAYLOAD,
         normalize_aggregated,
@@ -495,14 +494,12 @@ def start_preagg_ingest(
         now_ms = int(time.time() * 1000)
         preagg = normalize_aggregated(batch).cache()
 
-        def write_delayed() -> None:
-            # T4 for the preagg families (r7 verdict task 9): a flush
-            # whose timestamp predates the rollup delay lands AFTER its
-            # window was rolled — record the affected (locator, family,
-            # 20m slot) so reroll_preagg can recompute exactly those
-            # groups. Same replay discipline as start_ingest's delayed
-            # sink: unconditional overwrite of this batch_id directory.
-            (
+        # T4 for the preagg families (r7 verdict task 9): a flush whose
+        # timestamp predates the rollup delay lands AFTER its window was
+        # rolled — record the affected (locator, family, 20m slot) so
+        # reroll_preagg can recompute exactly those groups
+        writes = [] if delayed_path is None else [
+            lambda: _overwrite_batch(
                 preagg.filter(F.col("ts") < F.lit(now_ms - ROLLUP_DELAY_MS))
                 .select(
                     "tenant_id",
@@ -510,34 +507,27 @@ def start_preagg_ingest(
                     "rollup_type",
                     R.window_start(F.col("ts"), G.MIN_20).alias("slot_window_start"),
                 )
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(f"{delayed_path}/batch_id={batch_id}")
+                .distinct(),
+                delayed_path,
+                batch_id,
             )
-
-        # batch_id-keyed dynamic overwrite per family sink: replays of the
-        # same micro-batch rewrite their own partitions (see start_ingest)
-        def write_family(family: str, df: DataFrame) -> None:
-            (
-                df.withColumn("date", F.to_date(F.timestamp_millis(F.col("ts"))))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.partitionBy("batch_id", "date")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(f"{tables_dir}/preagg_{family}")
+        ]
+        writes += [
+            partial(
+                _overwrite_batch,
+                df.withColumn("date", F.to_date(F.timestamp_millis(F.col("ts")))),
+                f"{tables_dir}/preagg_{fam}",
+                batch_id,
+                partition_by="date",
             )
-
-        writes = [write_delayed] if delayed_path is not None else []
-        writes += [partial(write_family, fam, df) for fam, df in route_by_type(preagg).items()]
+            for fam, df in route_by_type(preagg).items()
+        ]
         if catalog_path is not None:
             locs = preagg.withColumn("unit", F.lit(None).cast("string"))
             writes.append(lambda: discovery_upsert(locs, catalog_path))
         _write_sinks(preagg, writes)
 
-    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(process), checkpoint, available_now)
 
 
 DOC_INGEST_SCHEMA = "doc_id LONG, text STRING, lang STRING, source STRING"
@@ -572,7 +562,7 @@ def start_doc_ingest(
     INVARIANT NOTE: kept_path is NOT doc_id-unique across micro-batches.
     The duplicate-doc_id guard below is per-batch only; the same doc_id
     re-ingested with EDITED text in a later batch has a different
-    content_md5, survives the content dedup, and appends a second row.
+    content_md5, survives the content dedup, and writes a second row.
     That is the documented stream/batch split: the batch exact_dedup pass
     over the materialized corpus owns the doc_id-uniqueness invariant."""
     from blueflood_spark.operators.text import quality_gate
@@ -603,19 +593,13 @@ def start_doc_ingest(
         )
         verdicts = quality_gate(batch, min_tokens=min_tokens).select("doc_id", "keep", "drop_reason")
         joined = batch.join(verdicts, "doc_id").cache()
-        joined.filter(F.col("keep")).drop("keep", "drop_reason").write.mode("append").parquet(
-            kept_path
-        )
-        rejected = joined.filter(~F.col("keep")).drop("keep")
-        if rejected.limit(1).count() > 0:
-            rejected.write.mode("append").parquet(rejected_path)
+        kept = joined.filter(F.col("keep")).drop("keep", "drop_reason")
+        _overwrite_batch(kept, kept_path, batch_id)
+        _overwrite_batch(joined.filter(~F.col("keep")).drop("keep"), rejected_path, batch_id)
         joined.unpersist()
         batch.unpersist()
 
-    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(process), checkpoint, available_now)
 
 
 def start_session_stream(
@@ -666,15 +650,11 @@ def start_session_stream(
             (F.col("session_end") - F.col("session_start")).alias("span_ms"),
         )
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sessions_path)
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        agg.writeStream.outputMode("append").format("parquet").option("path", sessions_path),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_corpus_guard(
@@ -736,17 +716,12 @@ def start_corpus_guard(
         dup = F.coalesce(F.col("exact_dup"), F.lit(False)) | F.coalesce(
             F.col("near_dup"), F.lit(False)
         )
-        joined.filter(~dup).select(*batch.columns).write.mode("append").parquet(kept_path)
-        dups = joined.filter(dup)
-        if dups.limit(1).count() > 0:
-            dups.write.mode("append").parquet(dup_path)
+        _overwrite_batch(joined.filter(~dup).select(*batch.columns), kept_path, batch_id)
+        _overwrite_batch(joined.filter(dup), dup_path, batch_id)
         joined.unpersist()
         batch.unpersist()
 
-    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(process), checkpoint, available_now)
 
 
 def start_touch_join_stream(
@@ -773,10 +748,9 @@ def start_touch_join_stream(
     Input parquet schema (both sides): event_id long, user_id long,
     ts_ms long (epoch ms), event_type string. Output: one row per
     qualifying (conversion, touch) pair with the wait."""
+    schema = "event_id long, user_id long, ts_ms long, event_type string"
     touches = (
-        spark.readStream.schema(
-            "event_id long, user_id long, ts_ms long, event_type string"
-        )
+        spark.readStream.schema(schema)
         .parquet(touches_path)
         .select(
             F.col("event_id").alias("touch_id"),
@@ -788,9 +762,7 @@ def start_touch_join_stream(
         .withWatermark("t_time", f"{watermark_seconds} seconds")
     )
     convs = (
-        spark.readStream.schema(
-            "event_id long, user_id long, ts_ms long, event_type string"
-        )
+        spark.readStream.schema(schema)
         .parquet(conversions_path)
         .select(
             F.col("event_id").alias("conv_id"),
@@ -819,15 +791,72 @@ def start_touch_join_stream(
         "touch_ms",
         (F.col("conv_ms") - F.col("touch_ms")).alias("wait_ms"),
     )
-    writer = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        joined.writeStream.outputMode("append").format("parquet").option("path", out_path),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _close_windows(pdfs, open_w, max_ts, closed_hi, window_ms, close_delay_ms, empty, add):
+    """Per-series event-time window closing, shared by the alert and
+    CUSUM machines. Folds each (ts, cents) sample into its open window
+    with `add(acc, cents)`, starting from `empty`; drops samples for a
+    window at or before `closed_hi`, the last window already consumed
+    (the watermark rule — `close_delay_ms` is the allowed lateness); and
+    raises the series' event-time high-water mark `max_ts`. Then pops,
+    in ascending order, every open window that `max_ts` has passed by
+    `window_ms + close_delay_ms`, so the machine never replays out of
+    order. Returns ([(window_start, acc), ...], max_ts, closed_hi)."""
+    for pdf in pdfs:
+        ws_col = (pdf["ts"] // window_ms) * window_ms
+        for ws, cents in zip(ws_col, pdf["cents"]):
+            if int(ws) > closed_hi:  # watermark rule: too-late → drop
+                open_w[int(ws)] = add(open_w.get(int(ws), empty), int(cents))
+        if len(pdf):
+            max_ts = max(max_ts, int(pdf["ts"].max()))
+    closed = [
+        (ws, open_w.pop(ws))
+        for ws in sorted(w for w in open_w if w + window_ms + close_delay_ms <= max_ts)
+    ]
+    return closed, max_ts, closed[-1][0] if closed else closed_hi
+
+
+def _event_frame(key, names, events):
+    """A machine's output rows: the series key, then one column per name
+    from the `events` tuples."""
+    import pandas as pd
+
+    cols = {"tenant_id": [key[0]] * len(events), "metric_name": [key[1]] * len(events)}
+    cols.update(zip(names, map(list, zip(*events))))
+    return pd.DataFrame(cols)
+
+
+def _start_series_machine(
+    spark, raw_path, out_path, checkpoint, available_now, machine, out_schema, state_schema
+):
+    """Run a per-series machine (alert, CUSUM) over the raw sink's
+    samples in integer cents. The shuffle key is the series locator,
+    exactly the rollup pipeline's partitioning; the machine's rows go to
+    an append-only file sink."""
+    samples = read_raw_stream(spark, raw_path).select(
+        "tenant_id",
+        "metric_name",
+        "ts",
+        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+    )
+    out = samples.groupBy("tenant_id", "metric_name").applyInPandasWithState(
+        machine,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf="NoTimeout",
+    )
+    return _start(
+        out.writeStream.outputMode("append").format("parquet").option("path", out_path),
+        checkpoint,
+        available_now,
+    )
 
 
 def start_alert_stream(
@@ -850,8 +879,9 @@ def start_alert_stream(
     mark; a window is CLOSED — and only then fed to the machine, in
     ascending order — once the series has seen a sample at least
     `window_ms + close_delay_ms` past its start (per-series event-time
-    closing, the same discipline the batch twin gets for free from
-    completed windows). Emits one row per OFF→ON / ON→OFF transition.
+    closing, `_close_windows`, the same discipline the batch twin gets
+    for free from completed windows). Emits one row per OFF→ON / ON→OFF
+    transition.
 
     Divergence note vs the batch twin: the stream emits the transition
     EVENTS (trigger/resolve timestamps — identical to the batch
@@ -859,57 +889,25 @@ def start_alert_stream(
     episode's n_breach_windows (full triggering-run length) isn't known
     at trigger time in a stream, so it is not emitted here. Samples for
     a window the machine has already consumed are DROPPED (the
-    watermark rule — `close_delay_ms` is the allowed lateness), so the
-    machine never replays out of order.
+    watermark rule — `close_delay_ms` is the allowed lateness).
 
     Scale shape: state per series is O(open windows) — bounded by
-    out-of-orderness, not history; the machine registers are O(1). The
-    shuffle key is the series locator, exactly the rollup pipeline's
-    partitioning."""
+    out-of-orderness, not history; the machine registers are O(1)."""
     import json as _json
 
-    import pandas as pd
-
-    raw = spark.readStream.schema(
-        "tenant_id string, metric_name string, ts long, value double, unit string,"
-        " ttl_seconds int, batch_id long, date date"
-    ).parquet(raw_path)
-    samples = raw.select(
-        "tenant_id",
-        "metric_name",
-        "ts",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-    )
-
-    out_schema = (
-        "tenant_id string, metric_name string, event_ms long, event string"
-    )
-    state_schema = (
-        "alarm int, run_flag int, run_len int, open_json string,"
-        " max_ts long, closed_hi long"
-    )
-
     def machine(key, pdfs, state):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return
         if state.exists:
             alarm, run_flag, run_len, open_json, max_ts, closed_hi = state.get
             open_w = {int(k): int(v) for k, v in _json.loads(open_json).items()}
         else:
             alarm, run_flag, run_len, open_w, max_ts = 0, -1, 0, {}, 0
             closed_hi = -(2**62)
-        for pdf in pdfs:
-            ws_col = (pdf["ts"] // window_ms) * window_ms
-            for ws, cents in zip(ws_col, pdf["cents"]):
-                if int(ws) > closed_hi:  # watermark rule: too-late → drop
-                    open_w[int(ws)] = open_w.get(int(ws), 0) + int(cents)
-            if len(pdf):
-                max_ts = max(max_ts, int(pdf["ts"].max()))
+        closed, max_ts, closed_hi = _close_windows(
+            pdfs, open_w, max_ts, closed_hi, window_ms, close_delay_ms, 0, lambda s, c: s + c
+        )
         events = []
-        for ws in sorted(w for w in open_w if w + window_ms + close_delay_ms <= max_ts):
-            closed_hi = ws
-            flag = 1 if open_w.pop(ws) >= thresh_cents else 0
+        for ws, cents in closed:
+            flag = 1 if cents >= thresh_cents else 0
             if flag == run_flag:
                 run_len += 1
             else:
@@ -931,31 +929,18 @@ def start_alert_stream(
             )
         )
         if events:
-            yield pd.DataFrame(
-                {
-                    "tenant_id": [key[0]] * len(events),
-                    "metric_name": [key[1]] * len(events),
-                    "event_ms": [e[0] for e in events],
-                    "event": [e[1] for e in events],
-                }
-            )
+            yield _event_frame(key, ("event_ms", "event"), events)
 
-    transitions = samples.groupBy("tenant_id", "metric_name").applyInPandasWithState(
+    return _start_series_machine(
+        spark,
+        raw_path,
+        alerts_out_path,
+        checkpoint,
+        available_now,
         machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+        "tenant_id string, metric_name string, event_ms long, event string",
+        "alarm int, run_flag int, run_len int, open_json string, max_ts long, closed_hi long",
     )
-    writer = (
-        transitions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", alerts_out_path)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_cusum_stream(
@@ -983,10 +968,11 @@ def start_cusum_stream(
     the batch twin, so the machine is bit-deterministic and
     replay-safe.
 
-    Window closing, late-data, and state-size discipline are identical
-    to start_alert_stream: per-series event-time closing at
-    window_ms + close_delay_ms, samples for already-consumed windows
-    dropped (watermark rule), state O(open windows) + O(1) registers.
+    Window closing, late-data, and state-size discipline are
+    start_alert_stream's (`_close_windows`): per-series event-time
+    closing at window_ms + close_delay_ms, samples for already-consumed
+    windows dropped (watermark rule), state O(open windows) + O(1)
+    registers.
 
     Divergence note vs the batch twin: the batch query flags against
     the whole-series mean (retrospective change-point analysis); the
@@ -995,32 +981,7 @@ def start_cusum_stream(
     the shift point (asserted by the differential test)."""
     import json as _json
 
-    import pandas as pd
-
-    raw = spark.readStream.schema(
-        "tenant_id string, metric_name string, ts long, value double, unit string,"
-        " ttl_seconds int, batch_id long, date date"
-    ).parquet(raw_path)
-    samples = raw.select(
-        "tenant_id",
-        "metric_name",
-        "ts",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-    )
-
-    out_schema = (
-        "tenant_id string, metric_name string, window_start long,"
-        " direction string, cusum long, threshold long"
-    )
-    state_schema = (
-        "n_closed int, mu long, h long, calib_json string, cpos long,"
-        " cneg long, open_json string, max_ts long, closed_hi long"
-    )
-
     def machine(key, pdfs, state):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return
         if state.exists:
             (n_closed, mu, h, calib_json, cpos, cneg,
              open_json, max_ts, closed_hi) = state.get
@@ -1032,18 +993,12 @@ def start_cusum_stream(
         else:
             n_closed, mu, h, calib, cpos, cneg = 0, 0, 0, [], 0, 0
             open_w, max_ts, closed_hi = {}, 0, -(2**62)
-        for pdf in pdfs:
-            ws_col = (pdf["ts"] // window_ms) * window_ms
-            for ws, cents in zip(ws_col, pdf["cents"]):
-                if int(ws) > closed_hi:  # watermark rule: too-late → drop
-                    s, c = open_w.get(int(ws), (0, 0))
-                    open_w[int(ws)] = (s + int(cents), c + 1)
-            if len(pdf):
-                max_ts = max(max_ts, int(pdf["ts"].max()))
+        closed, max_ts, closed_hi = _close_windows(
+            pdfs, open_w, max_ts, closed_hi, window_ms, close_delay_ms,
+            (0, 0), lambda a, c: (a[0] + c, a[1] + 1),
+        )
         events = []
-        for ws in sorted(w for w in open_w if w + window_ms + close_delay_ms <= max_ts):
-            closed_hi = ws
-            s, c = open_w.pop(ws)
+        for ws, (s, c) in closed:
             # window mean in micro units: cents → micro is ×10_000; the
             # integer division floors exactly like the batch twin's
             # floor(avg*1e6) on non-negative sums
@@ -1077,33 +1032,20 @@ def start_cusum_stream(
             )
         )
         if events:
-            yield pd.DataFrame(
-                {
-                    "tenant_id": [key[0]] * len(events),
-                    "metric_name": [key[1]] * len(events),
-                    "window_start": [e[0] for e in events],
-                    "direction": [e[1] for e in events],
-                    "cusum": [e[2] for e in events],
-                    "threshold": [e[3] for e in events],
-                }
-            )
+            yield _event_frame(key, ("window_start", "direction", "cusum", "threshold"), events)
 
-    changes = samples.groupBy("tenant_id", "metric_name").applyInPandasWithState(
+    return _start_series_machine(
+        spark,
+        raw_path,
+        changes_out_path,
+        checkpoint,
+        available_now,
         machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+        "tenant_id string, metric_name string, window_start long,"
+        " direction string, cusum long, threshold long",
+        "n_closed int, mu long, h long, calib_json string, cpos long,"
+        " cneg long, open_json string, max_ts long, closed_hi long",
     )
-    writer = (
-        changes.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", changes_out_path)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_sketch_maintenance(
@@ -1120,36 +1062,26 @@ def start_sketch_maintenance(
     each micro-batch builds PARTIAL sketches with the exact batch
     operators — CMS cells over metric_name (hot-key tracking) and HLL
     registers of metric_name per tenant (cardinality) — and writes them
-    under `sk_batch=<id>` directories. Retry-idempotent by construction:
-    a replayed micro-batch OVERWRITES its own directory, never
-    double-merges. The merge happens at READ time and is trivial because
-    both sketches are mergeable by design — CMS is linear (sum cells),
-    HLL is a lattice (max registers) — so the merged table is
-    bit-identical to the batch sketch over the same rows regardless of
-    how the stream was chopped into micro-batches (asserted by the
-    differential test). This is the 'streaming = batch' claim for the
-    sketch family: same operators, same values, any arrival order."""
+    under `cms/batch_id=<id>` and `hll/batch_id=<id>`. The merge happens
+    at READ time and is trivial because both sketches are mergeable by
+    design — CMS is linear (sum cells), HLL is a lattice (max registers)
+    — so the merged table is bit-identical to the batch sketch over the
+    same rows regardless of how the stream was chopped into micro-batches
+    (asserted by the differential test). This is the 'streaming = batch'
+    claim for the sketch family: same operators, same values, any
+    arrival order."""
     from blueflood_spark.operators.sketches import count_min_sketch, hll_registers
 
-    raw = spark.readStream.schema(
-        "tenant_id string, metric_name string, ts long, value double, unit string,"
-        " ttl_seconds int, batch_id long, date date"
-    ).parquet(raw_path)
-
     def merge(batch: DataFrame, batch_id: int) -> None:
+        base = sketch_path.rstrip("/")
         cms = count_min_sketch(batch, "metric_name", depth=depth, width=width)
         hll = hll_registers(batch, "metric_name", ["tenant_id"], p=p)
-        base = sketch_path.rstrip("/")
-        cms.write.mode("overwrite").parquet(f"{base}/cms/sk_batch={batch_id}")
-        hll.write.mode("overwrite").parquet(f"{base}/hll/sk_batch={batch_id}")
+        _overwrite_batch(cms, f"{base}/cms", batch_id)
+        _overwrite_batch(hll, f"{base}/hll", batch_id)
 
-    writer = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        read_raw_stream(spark, raw_path).writeStream.foreachBatch(merge), checkpoint, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_cms_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
@@ -1177,8 +1109,7 @@ def start_bloom_maintenance(
     """Streaming maintenance of the corpus Bloom filter (foreachBatch):
     each micro-batch of documents builds a PARTIAL filter with the exact
     batch operator (sketches.bloom_words over md5(text) content keys)
-    and writes it under `bl_batch=<id>`. Retry-idempotent: a replayed
-    batch OVERWRITES its own directory. Merge happens at READ time and
+    and writes it under `batch_id=<id>`. Merge happens at READ time and
     is the lattice bit_or — the merged word table is bit-identical to
     the batch filter over the same rows regardless of micro-batch
     chopping (same 'streaming = batch' contract as
@@ -1194,17 +1125,9 @@ def start_bloom_maintenance(
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         keyed = batch.select(F.md5(F.col("text")).alias("key"))
-        words = bloom_words(keyed, "key", m_bits=m_bits, k=k)
-        words.write.mode("overwrite").parquet(
-            f"{bloom_path.rstrip('/')}/bl_batch={batch_id}"
-        )
+        _overwrite_batch(bloom_words(keyed, "key", m_bits=m_bits, k=k), bloom_path, batch_id)
 
-    writer = docs.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs.writeStream.foreachBatch(merge), checkpoint, available_now)
 
 
 def read_bloom_filter(spark: SparkSession, bloom_path: str) -> DataFrame:
@@ -1227,8 +1150,7 @@ def start_kmv_maintenance(
     """Streaming maintenance of per-group KMV sketches (foreachBatch):
     each micro-batch builds a PARTIAL sketch with the exact batch
     operator (sketches.kmv_sketch — the k smallest md5 hashes of the
-    batch's distinct values per group) under `kmv_batch=<id>`.
-    Retry-idempotent: a replayed batch OVERWRITES its own directory.
+    batch's distinct values per group) under `batch_id=<id>`.
     Merge happens at READ time and is the k-minimum lattice: the k
     smallest of the union of per-batch k-smallest sets IS the k
     smallest of the union (any global top-k hash is in its own batch's
@@ -1245,17 +1167,9 @@ def start_kmv_maintenance(
     ).parquet(events_path)
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        sk = kmv_sketch(batch, value_col, [group_col], k=k)
-        sk.write.mode("overwrite").parquet(
-            f"{kmv_path.rstrip('/')}/kmv_batch={batch_id}"
-        )
+        _overwrite_batch(kmv_sketch(batch, value_col, [group_col], k=k), kmv_path, batch_id)
 
-    writer = ev.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(ev.writeStream.foreachBatch(merge), checkpoint, available_now)
 
 
 def read_kmv_sketch(
@@ -1269,8 +1183,6 @@ def read_kmv_sketch(
     partials only retain their writer's k smallest hashes, so a larger
     read-side k would silently return values that are NOT the true
     k-minimum set (rank > writer-k rows can be wrong)."""
-    from pyspark.sql.window import Window
-
     parts = spark.read.parquet(kmv_path.rstrip("/"))
     w = Window.partitionBy(group_col).orderBy("h")
     return (
@@ -1291,39 +1203,23 @@ def start_exp_histogram_maintenance(
     """Streaming maintenance of the exponential-bucket histogram rollup
     (foreachBatch): each micro-batch builds PARTIAL 5m histograms with
     the exact batch operator (rollup.exp_histogram_from_raw) under
-    `eh_batch=<id>`. Retry-idempotent: replays overwrite. Merge at READ
-    time is bucket-count ADDITION (exp_histogram_merge at the same
-    granularity — the window snap is idempotent), so merged counts are
-    bit-identical to the batch rollup over the same rows under any
-    chopping. This is the constant-memory streaming alternative to the
-    exact-percentile timer path: O(64) state per series-window."""
-    from blueflood_spark.operators import granularity as G
-    from blueflood_spark.operators.rollup import exp_histogram_from_raw
-
-    raw = spark.readStream.schema(
-        "tenant_id string, metric_name string, ts long, value double, unit string,"
-        " ttl_seconds int, batch_id long, date date"
-    ).parquet(raw_path)
+    `batch_id=<id>`. Merge at READ time is bucket-count ADDITION
+    (exp_histogram_merge at the same granularity — the window snap is
+    idempotent), so merged counts are bit-identical to the batch rollup
+    over the same rows under any chopping. This is the constant-memory
+    streaming alternative to the exact-percentile timer path: O(64)
+    state per series-window."""
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        hist = exp_histogram_from_raw(batch, G.MIN_5)
-        hist.write.mode("overwrite").parquet(
-            f"{hist_path.rstrip('/')}/eh_batch={batch_id}"
-        )
+        _overwrite_batch(R.exp_histogram_from_raw(batch, G.MIN_5), hist_path, batch_id)
 
-    writer = raw.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint
+    return _start(
+        read_raw_stream(spark, raw_path).writeStream.foreachBatch(merge), checkpoint, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_exp_histogram(spark: SparkSession, hist_path: str) -> DataFrame:
     """Merged exponential histogram over all maintained partials: counts
     ADD per (locator, window, bucket) — one tiny agg over the partials."""
-    from blueflood_spark.operators import granularity as G
-    from blueflood_spark.operators.rollup import exp_histogram_merge
-
     parts = spark.read.parquet(hist_path.rstrip("/"))
-    return exp_histogram_merge(parts, G.MIN_5)
+    return R.exp_histogram_merge(parts, G.MIN_5)

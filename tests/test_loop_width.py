@@ -53,6 +53,23 @@ def test_fit_rows_per_partition_conf(spark):
         child.conf.unset(_LOOP_ROWS_PER_PARTITION_KEY)
 
 
+def test_fit_caps_at_parent_stamp_not_live_clone_width(spark):
+    # a concurrent loop's tiny fitted width installed on the shared clone
+    # must not cap a corpus-scale loop: the cap is the parent's stamp
+    from blueflood_spark.session import _LOOP_PARENT_WIDTH_KEY
+
+    key = "spark.sql.shuffle.partitions"
+    child = loop_session(spark)
+    live, stamp = child.conf.get(key), child.conf.get(_LOOP_PARENT_WIDTH_KEY)
+    child.conf.set(key, "1")
+    child.conf.set(_LOOP_PARENT_WIDTH_KEY, "8")
+    try:
+        assert fit_loop_width(10**11, child) == 8
+    finally:
+        child.conf.set(key, live)
+        child.conf.set(_LOOP_PARENT_WIDTH_KEY, stamp)
+
+
 class _BrokenConf:
     def get(self, *a, **k):
         raise RuntimeError("conf unavailable")

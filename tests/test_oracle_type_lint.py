@@ -13,12 +13,10 @@ No Spark session needed — pure DuckDB, runs in seconds at sf0.001.
 """
 
 import re
-import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [

@@ -6,9 +6,9 @@ regresses the stamped-coverage union the judge tracks."""
 
 import glob
 import json
-import sys
+import os
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 WINDOW = 50
 
@@ -21,7 +21,7 @@ def _registry():
 
 def _green_stamps():
     stamped = set()
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         try:
             data = json.load(open(f))
         except Exception:

@@ -12,11 +12,9 @@ move them; the load-bearing facts (ONE shuffle in the cascade, ONE
 semi join in the sweep, NO nested-loop in the blocklist) are exact."""
 
 import re
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
 
 SF = "/root/testdata/sf0.001"
 

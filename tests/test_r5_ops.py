@@ -1,12 +1,8 @@
 """Round-5 operators: Bloom membership, triangle counting, tokenizer
 fertility, URL blocklist, packing report, exponential histogram, LTTB."""
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 
 def _df(spark, rows, schema):

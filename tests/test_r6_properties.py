@@ -1,14 +1,11 @@
 """Round-6 property tests: the changed/new operators against
 pure-Python references on randomized inputs (hypothesis)."""
 
-import sys
 from collections import Counter
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 
 # ---------------------------------------------------------------------------

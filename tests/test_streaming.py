@@ -6,6 +6,7 @@ import glob
 import json
 import os
 import time
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -376,6 +377,159 @@ def test_ingest_replay_is_idempotent(spark, dirs):
     raw = spark.read.parquet(dirs["raw"])
     assert raw.count() == 6  # NOT 12: replay overwrote batch_id=0
     assert spark.read.parquet(dirs["rejected"]).count() == 1
+
+
+def _write_raw_sink(spark, path):
+    # one raw-sink file: 2 tenants x 3 series, a sample every 20 s for 40
+    # minutes, so the 5m rollup finalizes its early windows
+    rows = [
+        (f"t{i % 2}", f"m.{i % 3}", 1_700_000_000_000 + i * 20_000, float(i % 50), "", 0, 0, None)
+        for i in range(120)
+    ]
+    spark.createDataFrame(rows, P.RAW_SINK_SCHEMA).repartition(1).write.parquet(path)
+
+
+def _write_docs(path, rows):
+    os.makedirs(path)
+    write_payload(f"{path}/docs.json", rows)
+
+
+def _replay_rollup(spark, d, events):
+    _write_raw_sink(spark, d("raw"))
+    ev = d("events") if events else None
+
+    def start(ckpt):
+        return P.start_streaming_rollup(spark, d("raw"), d("rollups"), ckpt, events_path=ev)
+
+    return start, [d("rollups")] + ([ev] if events else [])
+
+
+def _replay_preagg(spark, d):
+    os.makedirs(d("in"))
+    payload = {
+        "tenantId": "t1",
+        "timestamp": int(time.time() * 1000) - 86_400_000,  # delayed: 1 day old
+        "flushInterval": 30000,
+        "counters": [{"name": "c.hits", "value": 60.0, "rate": 2.0}],
+        "gauges": [{"name": "g.depth", "value": 7.5}],
+        "timers": [{"name": "t.req", "count": 10, "rate": 0.33, "min": 1.0, "max": 9.0,
+                    "sum": 50.0, "avg": 5.0, "std": 2.0, "percentiles": {"p99": {"avg": 8.8}}}],
+        "sets": [{"name": "s.users", "values": ["a", "b", "a"]}],
+    }
+    write_payload(f"{d('in')}/b.json", [payload])
+
+    def start(ckpt):
+        return P.start_preagg_ingest(spark, d("in"), d("tables"), ckpt, delayed_path=d("delayed"))
+
+    fams = [d("tables", f"preagg_{fam}") for fam in ("counter", "gauge", "timer", "set")]
+    return start, fams + [d("delayed")]
+
+
+def _replay_doc_ingest(spark, d):
+    _write_docs(d("in"), [
+        {"doc_id": 1, "text": "the quick brown fox jumps over a lazy dog and runs far away today",
+         "lang": "en", "source": "s"},
+        {"doc_id": 2, "text": "zx qq", "lang": "en", "source": "s"},  # too short
+    ])
+
+    def start(ckpt):
+        return P.start_doc_ingest(spark, d("in"), d("kept"), d("rejected"), ckpt)
+
+    return start, [d("kept"), d("rejected")]
+
+
+def _replay_corpus_guard(spark, d):
+    text = "metrics rollups aggregate time series data in windows"
+    spark.createDataFrame([(0, text)], "doc_id long, text string").write.parquet(d("corpus"))
+    _write_docs(d("in"), [
+        {"doc_id": 100, "text": text, "lang": "en", "source": "s"},  # exact dup
+        {"doc_id": 1, "text": "totally fresh content for the guard", "lang": "en", "source": "s"},
+    ])
+
+    def start(ckpt):
+        return P.start_corpus_guard(spark, d("in"), d("corpus"), d("kept"), d("dup"), ckpt)
+
+    return start, [d("kept"), d("dup")]
+
+
+def _replay_sketch(spark, d):
+    _write_raw_sink(spark, d("raw"))
+
+    def start(ckpt):
+        return P.start_sketch_maintenance(spark, d("raw"), d("sk"), ckpt)
+
+    return start, [d("sk", "cms"), d("sk", "hll")]
+
+
+def _replay_bloom(spark, d):
+    rows = [(i, f"doc body {i % 37}", "en", "s", 10) for i in range(100)]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).repartition(1).write.parquet(d("docs"))
+
+    def start(ckpt):
+        return P.start_bloom_maintenance(spark, d("docs"), d("bl"), ckpt)
+
+    return start, [d("bl")]
+
+
+def _replay_kmv(spark, d):
+    rows = [
+        (i, 1_700_000_000_000 + i, (i * 7) % 300, f"et{i % 4}", float(i), "") for i in range(200)
+    ]
+    spark.createDataFrame(
+        rows, "event_id long, ts long, user_id long, event_type string, value double, props string"
+    ).repartition(1).write.parquet(d("ev"))
+
+    def start(ckpt):
+        return P.start_kmv_maintenance(spark, d("ev"), d("kmv"), ckpt, k=16)
+
+    return start, [d("kmv")]
+
+
+def _replay_exp_histogram(spark, d):
+    _write_raw_sink(spark, d("raw"))
+
+    def start(ckpt):
+        return P.start_exp_histogram_maintenance(spark, d("raw"), d("eh"), ckpt)
+
+    return start, [d("eh")]
+
+
+REPLAY_CASES = {
+    "rollup": partial(_replay_rollup, events=False),
+    "rollup_events": partial(_replay_rollup, events=True),
+    "preagg_ingest": _replay_preagg,
+    "doc_ingest": _replay_doc_ingest,
+    "corpus_guard": _replay_corpus_guard,
+    "cms_hll": _replay_sketch,
+    "bloom": _replay_bloom,
+    "kmv": _replay_kmv,
+    "exp_histogram": _replay_exp_histogram,
+}
+
+
+@pytest.mark.parametrize("case", list(REPLAY_CASES))
+def test_foreach_batch_stream_replay_is_idempotent(spark, tmp_path, case):
+    """The sink rule, for every foreachBatch stream: replaying the same
+    input on a FRESH checkpoint into the same output paths forces batch_id
+    0 again, and the merged output must equal one run's output — the
+    replay overwrites its batch_id directories instead of adding a copy."""
+    start, outputs = REPLAY_CASES[case](spark, lambda *p: str(tmp_path.joinpath(*p)))
+
+    def snapshot():
+        out = []
+        for path in outputs:
+            df = spark.read.parquet(path).drop("emitted_at_ms")  # wall clock of the write
+            rows = sorted(r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect())
+            assert rows, f"{path} is empty: the replay would prove nothing"
+            out.append(rows)
+        return out
+
+    start(str(tmp_path / "ckpt0")).awaitTermination(120)
+    once = snapshot()
+    start(str(tmp_path / "ckpt1")).awaitTermination(120)
+    assert snapshot() == once
 
 
 def test_ingest_failed_sink_replays_cleanly(spark, dirs, tmp_path):
@@ -856,8 +1010,8 @@ def test_cusum_stream_matches_sequential_machine(spark, tmp_path):
 def test_sketch_maintenance_merge_equals_batch(spark, tmp_path):
     """Micro-batched sketch partials merged at read time must equal the
     batch sketches over the same rows EXACTLY — CMS by linearity, HLL by
-    the register lattice — across a restart, and a replayed batch must
-    not double-merge (overwrite idempotence)."""
+    the register lattice — across a restart (replay: see
+    test_foreach_batch_stream_replay_is_idempotent)."""
     import os
 
     from blueflood_spark.operators.sketches import count_min_sketch, hll_registers
@@ -896,17 +1050,6 @@ def test_sketch_maintenance_merge_equals_batch(spark, tmp_path):
         for r in P.read_hll_sketch(spark, sk_dir).collect()
     }
     assert got_hll == want_hll
-
-    # replay idempotence: re-running a micro-batch's merge must overwrite,
-    # not double-count — replay whatever partial batch 0 actually stored
-    # (chunk-agnostic: no assumption about how the stream split the input)
-    df0 = spark.read.parquet(sk_dir + "/cms/sk_batch=0")
-    schema0, part0 = df0.schema, df0.collect()
-    spark.createDataFrame(part0, schema0).write.mode("overwrite").parquet(
-        sk_dir + "/cms/sk_batch=0"
-    )
-    got_cms2 = {(r.j, r.b): r.cell for r in P.read_cms_sketch(spark, sk_dir).collect()}
-    assert got_cms2 == want_cms
 
 
 def test_kmv_maintenance_merge_equals_batch(spark, tmp_path):
@@ -949,18 +1092,6 @@ def test_kmv_maintenance_merge_equals_batch(spark, tmp_path):
         for r in P.read_kmv_sketch(spark, kmv_dir, k=16).collect()
     }
     assert got == want
-
-    # replay idempotence: overwrite batch 0's partial with itself
-    df0 = spark.read.parquet(kmv_dir + "/kmv_batch=0")
-    schema0, part0 = df0.schema, df0.collect()
-    spark.createDataFrame(part0, schema0).write.mode("overwrite").parquet(
-        kmv_dir + "/kmv_batch=0"
-    )
-    got2 = {
-        (r.event_type, r.rank, r.h)
-        for r in P.read_kmv_sketch(spark, kmv_dir, k=16).collect()
-    }
-    assert got2 == want
 
 
 def test_exp_histogram_maintenance_merge_equals_batch(spark, tmp_path):
