@@ -222,6 +222,62 @@ def test_series_frames_are_unsorted_single_job_scans(spark):
     assert len(sc.statusTracker().getJobIdsForGroup("serve_one_view")) == 1
 
 
+def _view_jobs(spark, rollups) -> int:
+    """Spark jobs one get_view request over `rollups` launches."""
+    import uuid
+
+    from blueflood_spark.plans import query_api as QA
+
+    sc = spark.sparkContext
+    group = f"serve_one_view_{uuid.uuid4().hex}"
+    params = QA.parse_params({"from": ["0"], "to": ["36000000"], "resolution": ["MIN5"]})
+    sc.setJobGroup(group, "one get_view request")
+    try:
+        resp = QA.get_view(rollups, "t1", "m", params)
+    finally:
+        sc.setJobGroup(None, None)
+    assert resp["metadata"]["count"] == 120
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def small_rollups_store(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "rollups")
+    spark.range(120).select(
+        F.lit("t1").alias("tenant_id"), F.lit("m").alias("metric_name"),
+        F.lit("5m").alias("resolution"), (F.col("id") * 300_000).alias("window_start"),
+        F.lit(5).cast("long").alias("num_points"), F.col("id").cast("double").alias("avg"),
+        F.col("id").cast("double").alias("sum"),
+    ).write.partitionBy("resolution").parquet(path)
+    return path
+
+
+def test_small_parquet_view_runs_no_spark_job(spark, small_rollups_store):
+    """A get_view over a small plain parquet scan is read on the driver:
+    the request launches no Spark job."""
+    assert _view_jobs(spark, spark.read.parquet(small_rollups_store)) == 0
+
+
+@pytest.mark.parametrize("shape", ["filtered", "unioned", "cached"])
+def test_non_plain_parquet_view_runs_one_spark_job(spark, small_rollups_store, shape):
+    """Filtered, unioned or cached parquet frames are not plain scans:
+    their get_view still runs as exactly one Spark job."""
+    df = spark.read.parquet(small_rollups_store)
+    if shape == "filtered":
+        df = df.filter("num_points > 0")
+    elif shape == "unioned":
+        df = df.filter("window_start < 18000000").union(df.filter("window_start >= 18000000"))
+    else:
+        df = df.cache()
+        df.count()
+    try:
+        assert _view_jobs(spark, df) == 1
+    finally:
+        df.unpersist()
+
+
 def test_pagerank_runs_as_one_job_with_lazy_marks(spark):
     """llm_dup_pagerank (r8): every checkpoint mark lands in the AQE-off
     loop-session clone, so plan CONSTRUCTION launches no jobs (under

@@ -204,3 +204,189 @@ def test_responses_are_time_ordered_over_unordered_files(spark, tmp_path):
         assert set(multi) == set(names)
         for m in names:
             ascending(multi[m], n)
+
+
+# ---------------------------------------------------------------------------
+# the driver read: same JSON as the Spark job, on both stored layouts
+# ---------------------------------------------------------------------------
+
+PARITY_RES = ["FULL", "MIN5", "MIN20", "MIN60", "MIN240", "MIN1440"]
+DAY = 86_400_000
+ROLLUP_COLS = (
+    "tenant_id string, metric_name string, resolution string, window_start long,"
+    " num_points long, avg double, var_pop double, min double, max double, sum double,"
+    " rate double, latest_value double, percentiles map<string,double>"
+)
+
+
+def _parity_rows():
+    """Rollups of a basic (m.a), gauge (m.g) and timer (m.t) series at every
+    resolution over five days, every fifth window with numPoints == 0, plus a
+    second tenant; and one hour of raw samples per series."""
+    rollups, raw = [], []
+    for tenant in ("t1", "t2"):
+        for g in G.GRANULARITIES[1:]:
+            for i in range(min(5 * DAY // g.milliseconds, 60)):
+                for k, m in enumerate(("m.a", "m.g", "m.t")):
+                    x = i + k / 4 + (tenant == "t2")
+                    pct = {"50": x, "99": 2 * x, "999": None} if m == "m.t" else None
+                    rollups.append((tenant, m, g.name, i * g.milliseconds, 0 if i % 5 == 3 else 5,
+                                    x, x / 3, x - 1, x + 1, 5 * x, x / 60, -x, pct))
+        for i in range(90):
+            for k, m in enumerate(("m.a", "m.g")):
+                raw.append((tenant, m, i * MIN, i + k / 8, "bytes", 86_400))
+    return rollups, raw
+
+
+@pytest.fixture(scope="module")
+def parity_stores(spark, tmp_path_factory):
+    """{layout: (rollups frame, raw frame)}: "tables" is the
+    tables.write_rollups / write_raw layout read by plain spark.read.parquet
+    (resolution and date are directories); "sinks" is the streaming sinks'
+    batch_id=N layout read with an explicit schema (resolution is a data
+    column, num_points is stored as int and read as long)."""
+    from blueflood_spark.sources import tables as TB
+    from blueflood_spark.streaming import pipeline as PL
+
+    root = tmp_path_factory.mktemp("parity")
+    rollup_rows, raw_rows = _parity_rows()
+    rollups = spark.createDataFrame(rollup_rows, ROLLUP_COLS)
+    raw = spark.createDataFrame(raw_rows, "tenant_id string, metric_name string, ts long, value double,"
+                                          " unit string, ttl_seconds int")
+    TB.write_rollups(rollups, f"{root}/tables/rollups", mode="overwrite")
+    TB.write_raw(raw, f"{root}/tables/raw", mode="overwrite")
+    for b in (0, 1):
+        part = F.col("window_start") % 2 == b
+        PL._overwrite_batch(rollups.filter(part).withColumn("num_points", F.col("num_points").cast("int")),
+                            f"{root}/sinks/rollups", b)
+        PL._overwrite_batch(TB.with_date_partition(raw.filter(F.col("ts") % 2 == b), "ts"),
+                            f"{root}/sinks/raw", b, partition_by="date")
+    return {
+        "tables": (spark.read.parquet(f"{root}/tables/rollups"), spark.read.parquet(f"{root}/tables/raw")),
+        "sinks": (spark.read.schema(ROLLUP_COLS + ", batch_id long").parquet(f"{root}/sinks/rollups"),
+                  spark.read.schema(PL.RAW_SINK_SCHEMA).parquet(f"{root}/sinks/raw")),
+    }
+
+
+def _series_calls(rollups, raw, res):
+    """The requests of one resolution: (name, zero-arg call)."""
+    p = lambda select=None: Q.parse_params(  # noqa: E731
+        {"from": ["0"], "to": [str(5 * DAY)], "resolution": [res], **({"select": [select]} if select else {})})
+    basic = "average,numPoints,sum,min,max,variance"
+    calls = [
+        ("view default", lambda: Q.get_view(rollups, "t1", "m.a", p(), raw=raw)),
+        ("view basic", lambda: Q.get_view(rollups, "t1", "m.a", p(basic), raw=raw, unit="bytes")),
+        ("view missing", lambda: Q.get_view(rollups, "t1", "m.missing", p(basic), raw=raw)),
+        ("multi", lambda: Q.get_views_multi(rollups, "t1", ["m.a", "m.missing", "m.g"], p(basic), raw=raw)),
+    ]
+    if res != "FULL":
+        calls += [
+            ("view gauge", lambda: Q.get_view(rollups, "t2", "m.g", p("numPoints,latest"), rollup_type="gauge")),
+            ("view timer", lambda: Q.get_view(rollups, "t1", "m.t", p("percentiles,rate,numPoints,average"),
+                                              rollup_type="timer")),
+            ("multi timer", lambda: Q.get_views_multi(rollups, "t2", ["m.t", "m.a"], p(), rollup_type="timer")),
+        ]
+    return calls
+
+
+def _paths_taken(caplog) -> set[str]:
+    return {("driver" if "on the driver" in r.getMessage() else "spark")
+            for r in caplog.records if r.name == Q.__name__}
+
+
+@pytest.mark.parametrize("res", PARITY_RES)
+@pytest.mark.parametrize("layout", ["tables", "sinks"])
+def test_driver_read_matches_spark_job(parity_stores, monkeypatch, caplog, layout, res):
+    """get_view / get_views_multi answer with identical JSON whether the
+    rows come from the driver read or from the Spark job (forced by a size
+    gate of 0): FULL's literals, numPoints == 0 nulling, percentiles,
+    latest, a missing metric, and a user-given read schema."""
+    import json
+
+    rollups, raw = parity_stores[layout]
+    seen = set()
+    for name, call in _series_calls(rollups, raw, res):
+        with caplog.at_level("DEBUG", logger=Q.__name__):
+            caplog.clear()
+            driver = json.dumps(call())
+            assert _paths_taken(caplog) == {"driver"}, name
+            with monkeypatch.context() as m:
+                m.setattr(Q, "_DRIVER_READ_MAX_BYTES", 0)
+                caplog.clear()
+                job = json.dumps(call())
+                assert _paths_taken(caplog) == {"spark"}, name
+        assert driver == job, name
+        seen.add(driver)
+    text = "".join(seen)
+    assert '"count": 0' in text  # the missing metric
+    if res != "FULL":
+        assert '"average": null, "numPoints": 0' in text  # numPoints == 0 nulls the stats
+        assert '"pct_99": ' in text and '"latest": ' in text
+    else:
+        assert '"numPoints": 1, ' in text and '"variance": 0.0' in text
+
+
+def _store_view(df):
+    """A zero-arg get_view over `df` (the 5m rollups of m.a)."""
+    p = Q.parse_params({"from": ["0"], "to": [str(60 * MIN)], "resolution": ["MIN5"]})
+    return lambda: Q.get_view(df, "t1", "m.a", p)
+
+
+@pytest.fixture()
+def small_store(spark, rollups, tmp_path):
+    path = str(tmp_path / "rollups")
+    rollups.write.partitionBy("resolution").parquet(path)
+    return path
+
+
+def test_driver_read_degrades_without_file_listing(spark, small_store, monkeypatch, caplog):
+    """No inputFiles() (Spark Connect, API drift), an inputFiles() that
+    raises, or a file that is not local: the Spark job serves the request."""
+    df = spark.read.parquet(small_store)
+    call = _store_view(df)
+    with monkeypatch.context() as m:
+        m.setattr(Q, "_DRIVER_READ_MAX_BYTES", 0)
+        expected = call()
+    assert expected["metadata"]["count"] == 12
+    cls = type(df)
+
+    def boom(self):
+        raise RuntimeError("inputFiles is not supported")
+
+    for patch in (
+        lambda m: m.delattr(cls, "inputFiles"),
+        lambda m: m.setattr(cls, "inputFiles", boom),
+        lambda m: m.setattr(cls, "inputFiles", lambda self: ["hdfs://nn:8020/rollups/resolution=5m/part-0.parquet"]),
+    ):
+        with monkeypatch.context() as m, caplog.at_level("DEBUG", logger=Q.__name__):
+            patch(m)
+            caplog.clear()
+            assert call() == expected
+            assert _paths_taken(caplog) == {"spark"}
+
+
+@pytest.mark.parametrize("damage", ["deleted", "corrupt"])
+def test_driver_read_degrades_to_the_spark_error(spark, small_store, caplog, damage):
+    """A file deleted after listing (os.stat fails) or one Arrow cannot
+    read: the request runs the Spark job, which raises today's error."""
+    import glob
+    import os
+
+    df = spark.read.parquet(small_store)  # lists the files now
+    victim = sorted(glob.glob(f"{small_store}/resolution=5m/*.parquet"))[0]
+    if damage == "deleted":
+        os.remove(victim)
+    else:
+        with open(victim, "wb") as fh:
+            fh.write(b"not a parquet file")
+    call = _store_view(df)
+    errors = []
+    for gate in (Q._DRIVER_READ_MAX_BYTES, 0):
+        with caplog.at_level("DEBUG", logger=Q.__name__), pytest.MonkeyPatch.context() as m:
+            m.setattr(Q, "_DRIVER_READ_MAX_BYTES", gate)
+            caplog.clear()
+            with pytest.raises(Exception) as e:
+                call()
+            assert _paths_taken(caplog) == {"spark"}
+        errors.append(type(e.value))
+    assert errors[0] is errors[1], errors
