@@ -15,14 +15,29 @@ Replaces the reference's Elasticsearch indices:
 At 100 TB the catalog is tiny relative to data (distinct locators, not
 samples) — it broadcasts; the token explode is linear in catalog size, not
 data size.
+
+Search execution: each search reads the tenant's rows as a ScanSpec
+(plans/scan.py), and its Spark frame (rlike filter, dedup or grouping)
+defines the result. When the catalog is a small plain parquet scan and the
+glob's regex reads alike in Python's re (glob.python_matcher), the search
+reads the rows eagerly, at call time, on the driver, does the match, the
+dedup or the next-level grouping in Python and returns a LocalRelation
+frame with the Spark frame's schema: collecting it runs no Spark job.
+Otherwise it returns the lazy Spark frame, as before. The path is logged
+at DEBUG on this module's logger.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from blueflood_spark.functions.glob import anchored, glob_to_regex, next_level_regex
+from blueflood_spark.functions.glob import anchored, glob_to_regex, next_level_regex, python_matcher
+from blueflood_spark.plans.scan import ScanSpec, SparkOnly, local_frame, scan_frame, through_gate
+
+log = logging.getLogger(__name__)
 
 
 def build_catalog(raw: DataFrame) -> DataFrame:
@@ -59,11 +74,27 @@ def build_tokens(catalog: DataFrame) -> DataFrame:
     ).dropDuplicates(["tenant_id", "path", "is_leaf"])
 
 
+def _tenant_scan(catalog: DataFrame, tenant_id: str, columns: tuple[str, ...]) -> ScanSpec:
+    return ScanSpec(catalog, partition=(), where=(("tenant_id", "==", tenant_id),),
+                    select=tuple((c, c) for c in columns))
+
+
+def _matching(rows: list[dict], glob: str, regex: str) -> list[dict]:
+    """The rows whose metric_name `regex` matches, as rlike would; raises
+    SparkOnly when Python's re is not proven to agree with it."""
+    rx = python_matcher(glob, regex, (r["metric_name"] for r in rows))
+    if rx is None:
+        raise SparkOnly("regex outside the Python-parity subset")
+    return [r for r in rows if r["metric_name"] is not None and rx.search(r["metric_name"])]
+
+
 def search_metrics(
     catalog: DataFrame, tenant_id: str, glob: str, include_enum_values: bool = False
 ) -> DataFrame:
     """`GET /v2.0/:tenantId/metrics/search?query=<glob>` (SURVEY §2.11;
-    HttpMetricsIndexHandler.java:40-60): full-name glob match, deduped.
+    HttpMetricsIndexHandler.java:40-60): full-name glob match, deduped
+    (one row per name; which unit a name with several keeps is
+    unspecified, as in dropDuplicates).
 
     include_enum_values (r5 audit): the reference AT THIS VERSION has no
     enum-metrics surface at all — SearchResult.java:24-43 carries only
@@ -75,15 +106,25 @@ def search_metrics(
     in README's coverage table — the API shape is served, the dead
     feature is not."""
     regex = anchored(glob_to_regex(glob))
+    spec = _tenant_scan(catalog, tenant_id, ("tenant_id", "metric_name", "unit"))
     out = (
-        catalog.filter(F.col("tenant_id") == tenant_id)
+        scan_frame(spec)
         .filter(F.col("metric_name").rlike(regex))
-        .select("tenant_id", "metric_name", "unit")
         .dropDuplicates(["tenant_id", "metric_name"])
     )
     if include_enum_values:
         out = out.withColumn("enum_values", F.array().cast("array<string>"))
-    return out
+
+    def on_driver(rows: list[dict]) -> DataFrame:
+        first: dict[str, dict] = {}
+        for r in _matching(rows, glob, regex):
+            first.setdefault(r["metric_name"], r)
+        found = [first[n] for n in sorted(first)]
+        if include_enum_values:
+            found = [dict(r, enum_values=[]) for r in found]
+        return local_frame(out, found)
+
+    return through_gate(spec, on_driver, lambda: out, log, "metric search")
 
 
 def search_metric_names(catalog: DataFrame, tenant_id: str, glob: str) -> DataFrame:
@@ -96,11 +137,8 @@ def search_metric_names(catalog: DataFrame, tenant_id: str, glob: str) -> DataFr
     """
     regex = anchored(next_level_regex(glob))
     base_level = len(glob.split("."))
-    matched = (
-        catalog.filter(F.col("tenant_id") == tenant_id)
-        .filter(F.col("metric_name").rlike(regex))
-        .select("metric_name")
-    )
+    spec = _tenant_scan(catalog, tenant_id, ("metric_name",))
+    matched = scan_frame(spec).filter(F.col("metric_name").rlike(regex))
     parts = F.split(F.col("metric_name"), r"\.")
     truncated = matched.select(
         F.concat_ws(".", F.slice(parts, 1, base_level)).alias("name"),
@@ -108,7 +146,7 @@ def search_metric_names(catalog: DataFrame, tenant_id: str, glob: str) -> DataFr
     )
     # a truncated name is a leaf iff a complete metric exists at base level;
     # it has a next level iff some metric extends past base level
-    return (
+    out = (
         truncated.groupBy("name")
         .agg(
             F.max(F.when(F.col("is_complete"), 1).otherwise(0)).alias("has_complete"),
@@ -120,3 +158,17 @@ def search_metric_names(catalog: DataFrame, tenant_id: str, glob: str) -> DataFr
             (F.col("has_next") == 1).alias("has_next_level"),
         )
     )
+
+    def on_driver(rows: list[dict]) -> DataFrame:
+        flags: dict[str, list[bool]] = {}
+        for r in _matching(rows, glob, regex):
+            tokens = r["metric_name"].split(".")
+            f = flags.setdefault(".".join(tokens[:base_level]), [False, False])
+            f[0] |= len(tokens) == base_level
+            f[1] |= len(tokens) != base_level
+        return local_frame(out, [
+            {"metric_name": n, "is_leaf": leaf, "has_next_level": nxt}
+            for n, (leaf, nxt) in sorted(flags.items())
+        ])
+
+    return through_gate(spec, on_driver, lambda: out, log, "metric name browse")

@@ -7,17 +7,37 @@ public Hadoop GlobPattern algorithm) and the next-level expansion in
 /root/reference/blueflood-elasticsearch/.../AbstractElasticIO.java:286-326.
 
 These are driver-side pure functions: the compiled regex is embedded as a
-literal into an `rlike` filter, so the actual matching runs JVM-side inside
-whole-stage codegen — no UDF.
+literal into an `rlike` filter, so on the Spark path the matching runs
+JVM-side inside whole-stage codegen — no UDF.
+
+A catalog search answered on the driver (catalog.py) matches the same
+regex string with Python's `re` instead, but only where the two engines
+provably agree (python_matcher):
+- the glob contains none of ``\\ [ ] ^ !``, so the regex is built only
+  from literals (``\\.``, ``\\$``, ``\\(``, ``\\)``, ``\\|``, ``\\+`` where
+  escaped), ``.``, ``.*``, ``[^.]*``, ``(a|b)``, ``{0,1}`` and the
+  ``^(?:...)$`` anchors, which both engines read alike;
+- no name contains a Java line terminator (``\\n``, ``\\r``, ``\\u0085``,
+  ``\\u2028``, ``\\u2029``): Java's ``.`` excludes all five and its ``$``
+  also matches before a final one; Python's do so only for ``\\n``.
+Every other search keeps the `rlike` path.
 """
 
 from __future__ import annotations
+
+import re
+from collections.abc import Iterable
 
 # regex metachars that are NOT glob special chars and must be escaped
 _ESCAPE = {".", "$", "(", ")", "|", "+"}
 
 TOKEN_SEP = r"\."
 ONE_TOKEN = "[^.]*"
+
+# glob characters that emit escapes, character classes or negation, whose
+# reading may differ between Java's regex and Python's re
+_JAVA_ONLY = frozenset("\\[]^!")
+_LINE_TERMINATOR = re.compile("[\n\r\u0085\u2028\u2029]")
 
 
 def glob_to_regex(glob: str) -> str:
@@ -109,3 +129,12 @@ def next_level_regex(query: str) -> str:
     base = _capture_up_to_next_token(TOKEN_SEP.join(parts[: total_tokens - 1]))
     last = _capture_up_to_next_token(parts[total_tokens - 1])
     return base + TOKEN_SEP + last + "(" + TOKEN_SEP + ONE_TOKEN + "){0,1}"
+
+
+def python_matcher(glob: str, regex: str, names: Iterable[str | None]) -> re.Pattern | None:
+    """`regex`, compiled from `glob`, as a Python pattern whose `search`
+    gives Spark's `rlike` (Java's `find`) answer on every one of `names`;
+    None when that is not proven (see the module docstring)."""
+    if _JAVA_ONLY.intersection(glob) or any(n and _LINE_TERMINATOR.search(n) for n in names):
+        return None
+    return re.compile(regex)

@@ -5,16 +5,30 @@ Reference: /root/reference/blueflood-http/.../HttpEventsQueryHandler.java:
 45-75 — from/until accept the human date grammar (DateTimeParser, F3) and
 are converted to epoch SECONDS at the query boundary (:72-75); the tags
 parameter is an exact term filter (EventElasticSearchIO.java:60-100).
+
+Execution: the request is a ScanSpec (plans/scan.py) whose Spark frame,
+ordered by `when`, defines the result. When the events table is a small
+plain parquet scan, get_events reads the rows eagerly, at call time, on
+the driver, sorts them by `when` and returns them as a LocalRelation frame
+with the Spark frame's schema: collecting it runs no Spark job. Otherwise
+it returns the lazy Spark frame, as before. The path is logged at DEBUG on
+this module's logger.
 """
 
 from __future__ import annotations
 
+import logging
 from datetime import datetime
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from blueflood_spark.functions.datetime_parser import parse_datetime
+from blueflood_spark.plans.scan import ScanSpec, local_frame, scan_frame, through_gate
+
+log = logging.getLogger(__name__)
+
+_BY_WHEN = itemgetter("when")
 
 
 def get_events(
@@ -26,13 +40,17 @@ def get_events(
     now: datetime | None = None,
 ) -> DataFrame:
     """Filter the events table (schemas.EVENTS: when is epoch seconds) by
-    tenant, parsed time range, and optional exact tag match."""
-    df = events.filter(F.col("tenant_id") == tenant_id)
+    tenant, parsed time range, and optional exact tag match (an equality
+    drops null tags), ordered by `when`."""
+    where = [("tenant_id", "==", tenant_id)]
     if from_str:
-        df = df.filter(F.col("when") >= int(parse_datetime(from_str, now).timestamp()))
+        where.append(("when", ">=", int(parse_datetime(from_str, now).timestamp())))
     if until_str:
-        df = df.filter(F.col("when") < int(parse_datetime(until_str, now).timestamp()))
+        where.append(("when", "<", int(parse_datetime(until_str, now).timestamp())))
     if tags:
         # reference tags filter is a term match on the tags field
-        df = df.filter(F.col("tags").isNotNull() & (F.col("tags") == tags))
-    return df.orderBy("when")
+        where.append(("tags", "==", tags))
+    spec = ScanSpec(events, partition=(), where=tuple(where), select=tuple((c, c) for c in events.columns))
+    frame = scan_frame(spec).orderBy("when")
+    return through_gate(spec, lambda rows: local_frame(frame, sorted(rows, key=_BY_WHEN)),
+                        lambda: frame, log, "events read")

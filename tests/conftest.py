@@ -17,3 +17,42 @@ def spark():
     except Exception:
         pass  # newer Sparks read TIMESTAMP(NANOS) natively; _t() normalizes
     yield s
+
+
+class ReadGate:
+    """Drives a serve call through the driver-read gate (plans/scan.py)
+    and, with the size gate at 0, through its Spark plan; `paths` lists
+    the path each call logged on `logger` since the last clear."""
+
+    def __init__(self, caplog, logger: str):
+        self.caplog = caplog
+        self.logger = logger
+        caplog.set_level("DEBUG", logger=logger)
+
+    def paths(self) -> list[str]:
+        return [("driver" if "on the driver" in r.getMessage() else "spark")
+                for r in self.caplog.records
+                if r.name == self.logger and "driver read failed" not in r.getMessage()]
+
+    def spark_only(self, call):
+        from blueflood_spark.plans import scan
+
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(scan, "_DRIVER_READ_MAX_BYTES", 0)
+            return call()
+
+    def both(self, call):
+        """(driver result, Spark result) of `call`, asserting each path."""
+        self.caplog.clear()
+        driver = call()
+        assert self.paths() == ["driver"]
+        self.caplog.clear()
+        spark_result = self.spark_only(call)
+        assert self.paths() == ["spark"]
+        return driver, spark_result
+
+
+@pytest.fixture()
+def read_gate(caplog):
+    """ReadGate factory: read_gate(logger name)."""
+    return lambda logger: ReadGate(caplog, logger)

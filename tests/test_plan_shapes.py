@@ -278,6 +278,81 @@ def test_non_plain_parquet_view_runs_one_spark_job(spark, small_rollups_store, s
         df.unpersist()
 
 
+@pytest.fixture()
+def small_serve_tables(spark, tmp_path):
+    """{table: path} of a small events table and metric catalog."""
+    from pyspark.sql import functions as F
+
+    paths = {"events": str(tmp_path / "events"), "catalog": str(tmp_path / "catalog")}
+    spark.range(200).select(
+        F.concat(F.lit("t"), (F.col("id") % 2).cast("string")).alias("tenant_id"),
+        (F.lit(1_700_000_000) + F.col("id") * 600).alias("when"),
+        F.concat(F.lit("event "), F.col("id").cast("string")).alias("what"),
+        F.lit("payload").alias("data"), F.lit("deploy").alias("tags"),
+    ).write.parquet(paths["events"])
+    spark.range(200).select(
+        F.lit("t1").alias("tenant_id"),
+        F.format_string("svc%d.host%02d.cpu", F.col("id") % 4, F.col("id") % 50).alias("metric_name"),
+        F.lit("percent").alias("unit"),
+    ).write.parquet(paths["catalog"])
+    return paths
+
+
+def _serve_calls(events, catalog) -> dict:
+    """The frame-returning serve endpoints, one request each."""
+    from datetime import datetime
+
+    from blueflood_spark import catalog as C
+    from blueflood_spark.plans import events_api as EA
+
+    now = datetime(2023, 11, 15)
+    return {
+        "events": lambda: EA.get_events(events, "t1", "1699000000", "now", "deploy", now=now),
+        "search": lambda: C.search_metrics(catalog, "t1", "svc1.*"),
+        "names": lambda: C.search_metric_names(catalog, "t1", "svc2.*"),
+    }
+
+
+def _request_jobs(spark, call) -> tuple[int, object, int]:
+    """(Spark jobs, optimized plan class, rows) of one request: the
+    endpoint call plus the caller's collect(), in a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"serve_one_request_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one serve request")
+    try:
+        df = call()
+        rows = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    plan = df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), plan, len(rows)
+
+
+@pytest.mark.parametrize("kind", ["events", "search", "names"])
+def test_small_parquet_events_and_search_run_no_spark_job(spark, small_serve_tables, kind):
+    """get_events, search_metrics and search_metric_names over small plain
+    parquet tables return a LocalRelation read on the driver: the request
+    launches no Spark job."""
+    events = spark.read.parquet(small_serve_tables["events"])
+    catalog = spark.read.parquet(small_serve_tables["catalog"])
+    jobs, plan, rows = _request_jobs(spark, _serve_calls(events, catalog)[kind])
+    assert (jobs, plan) == (0, "LocalRelation")
+    assert rows > 0
+
+
+@pytest.mark.parametrize("kind", ["events", "search", "names"])
+def test_filtered_events_and_search_run_spark_jobs(spark, small_serve_tables, kind):
+    """Over a filtered frame (not a plain scan) the same requests keep
+    their Spark plan and run at least one job."""
+    events = spark.read.parquet(small_serve_tables["events"]).filter("what != ''")
+    catalog = spark.read.parquet(small_serve_tables["catalog"]).filter("unit != ''")
+    jobs, plan, rows = _request_jobs(spark, _serve_calls(events, catalog)[kind])
+    assert jobs >= 1 and plan != "LocalRelation"
+    assert rows > 0
+
+
 def test_pagerank_runs_as_one_job_with_lazy_marks(spark):
     """llm_dup_pagerank (r8): every checkpoint mark lands in the AQE-off
     loop-session clone, so plan CONSTRUCTION launches no jobs (under

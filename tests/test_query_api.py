@@ -8,6 +8,7 @@ from blueflood_spark.operators import granularity as G
 from blueflood_spark.operators import repair as REP
 from blueflood_spark.operators import rollup as R
 from blueflood_spark.plans import query_api as Q
+from blueflood_spark.plans import scan as S
 
 MIN = 60_000
 
@@ -311,7 +312,7 @@ def test_driver_read_matches_spark_job(parity_stores, monkeypatch, caplog, layou
             driver = json.dumps(call())
             assert _paths_taken(caplog) == {"driver"}, name
             with monkeypatch.context() as m:
-                m.setattr(Q, "_DRIVER_READ_MAX_BYTES", 0)
+                m.setattr(S, "_DRIVER_READ_MAX_BYTES", 0)
                 caplog.clear()
                 job = json.dumps(call())
                 assert _paths_taken(caplog) == {"spark"}, name
@@ -345,7 +346,7 @@ def test_driver_read_degrades_without_file_listing(spark, small_store, monkeypat
     df = spark.read.parquet(small_store)
     call = _store_view(df)
     with monkeypatch.context() as m:
-        m.setattr(Q, "_DRIVER_READ_MAX_BYTES", 0)
+        m.setattr(S, "_DRIVER_READ_MAX_BYTES", 0)
         expected = call()
     assert expected["metadata"]["count"] == 12
     cls = type(df)
@@ -381,12 +382,40 @@ def test_driver_read_degrades_to_the_spark_error(spark, small_store, caplog, dam
             fh.write(b"not a parquet file")
     call = _store_view(df)
     errors = []
-    for gate in (Q._DRIVER_READ_MAX_BYTES, 0):
+    for gate in (S._DRIVER_READ_MAX_BYTES, 0):
         with caplog.at_level("DEBUG", logger=Q.__name__), pytest.MonkeyPatch.context() as m:
-            m.setattr(Q, "_DRIVER_READ_MAX_BYTES", gate)
+            m.setattr(S, "_DRIVER_READ_MAX_BYTES", gate)
             caplog.clear()
             with pytest.raises(Exception) as e:
                 call()
             assert _paths_taken(caplog) == {"spark"}
         errors.append(type(e.value))
     assert errors[0] is errors[1], errors
+
+
+def test_lookup_rollup_type_reads_the_catalog_on_the_driver(spark, tmp_path, read_gate):
+    """The (tenant, name) catalog lookup of get_view runs no Spark job on a
+    small plain parquet catalog and answers as the Spark plan does: the
+    stored type, or basic when the row is missing or its type is null."""
+    import uuid
+
+    path = str(tmp_path / "catalog")
+    spark.createDataFrame(
+        [("t1", "m.g", "B", "gauge"), ("t1", "m.n", "B", None), ("t2", "m.g", None, "timer")],
+        "tenant_id string, metric_name string, unit string, rollup_type string",
+    ).write.parquet(path)
+    cat = spark.read.parquet(path)
+    sc = spark.sparkContext
+    gate = read_gate(Q.__name__)
+    lookups = [("t1", "m.g"), ("t1", "m.n"), ("t1", "m.missing"), ("t2", "m.g"), ("t3", "m.g")]
+    for tenant, name in lookups:
+        group = f"lookup_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "one rollup type lookup")
+        try:
+            assert Q.lookup_rollup_type(cat, tenant, name)
+        finally:
+            sc.setJobGroup(None, None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        driver, job = gate.both(lambda: Q.lookup_rollup_type(cat, tenant, name))
+        assert driver == job
+    assert [Q.lookup_rollup_type(cat, t, n) for t, n in lookups] == ["gauge", "basic", "basic", "timer", "basic"]
