@@ -18,7 +18,8 @@ data size.
 
 Search execution: each search reads the tenant's rows as a ScanSpec
 (plans/scan.py), and its Spark frame (rlike filter, dedup or grouping)
-defines the result. When the catalog is a small plain parquet scan and the
+defines the result. When the catalog is a small plain parquet scan whose
+files hold at most _LOCAL_FRAME_MAX_ROWS rows (plans/scan.py) and the
 glob's regex reads alike in Python's re (glob.python_matcher), the search
 reads the rows eagerly, at call time, on the driver, does the match, the
 dedup or the next-level grouping in Python and returns a LocalRelation
@@ -30,12 +31,16 @@ at DEBUG on this module's logger.
 from __future__ import annotations
 
 import logging
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from blueflood_spark.functions.glob import anchored, glob_to_regex, next_level_regex, python_matcher
-from blueflood_spark.plans.scan import ScanSpec, SparkOnly, local_frame, scan_frame, through_gate
+from blueflood_spark.plans.scan import ScanSpec, SparkOnly, local_frame, scan_frame, through_gate, to_rows
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 log = logging.getLogger(__name__)
 
@@ -79,9 +84,11 @@ def _tenant_scan(catalog: DataFrame, tenant_id: str, columns: tuple[str, ...]) -
                     select=tuple((c, c) for c in columns))
 
 
-def _matching(rows: list[dict], glob: str, regex: str) -> list[dict]:
-    """The rows whose metric_name `regex` matches, as rlike would; raises
-    SparkOnly when Python's re is not proven to agree with it."""
+def _matching(table: pa.Table, glob: str, regex: str) -> list[dict]:
+    """The rows of a driver read whose metric_name `regex` matches, as
+    rlike would; raises SparkOnly when Python's re is not proven to agree
+    with it."""
+    rows = to_rows(table)
     rx = python_matcher(glob, regex, (r["metric_name"] for r in rows))
     if rx is None:
         raise SparkOnly("regex outside the Python-parity subset")
@@ -115,16 +122,16 @@ def search_metrics(
     if include_enum_values:
         out = out.withColumn("enum_values", F.array().cast("array<string>"))
 
-    def on_driver(rows: list[dict]) -> DataFrame:
+    def on_driver(table: pa.Table) -> DataFrame:
         first: dict[str, dict] = {}
-        for r in _matching(rows, glob, regex):
+        for r in _matching(table, glob, regex):
             first.setdefault(r["metric_name"], r)
         found = [first[n] for n in sorted(first)]
         if include_enum_values:
             found = [dict(r, enum_values=[]) for r in found]
         return local_frame(out, found)
 
-    return through_gate(spec, on_driver, lambda: out, log, "metric search")
+    return through_gate(spec, on_driver, lambda: out, log, "metric search", bounded=True)
 
 
 def search_metric_names(catalog: DataFrame, tenant_id: str, glob: str) -> DataFrame:
@@ -159,9 +166,9 @@ def search_metric_names(catalog: DataFrame, tenant_id: str, glob: str) -> DataFr
         )
     )
 
-    def on_driver(rows: list[dict]) -> DataFrame:
+    def on_driver(table: pa.Table) -> DataFrame:
         flags: dict[str, list[bool]] = {}
-        for r in _matching(rows, glob, regex):
+        for r in _matching(table, glob, regex):
             tokens = r["metric_name"].split(".")
             f = flags.setdefault(".".join(tokens[:base_level]), [False, False])
             f[0] |= len(tokens) == base_level
@@ -171,4 +178,4 @@ def search_metric_names(catalog: DataFrame, tenant_id: str, glob: str) -> DataFr
             for n, (leaf, nxt) in sorted(flags.items())
         ])
 
-    return through_gate(spec, on_driver, lambda: out, log, "metric name browse")
+    return through_gate(spec, on_driver, lambda: out, log, "metric name browse", bounded=True)

@@ -8,27 +8,29 @@ parameter is an exact term filter (EventElasticSearchIO.java:60-100).
 
 Execution: the request is a ScanSpec (plans/scan.py) whose Spark frame,
 ordered by `when`, defines the result. When the events table is a small
-plain parquet scan, get_events reads the rows eagerly, at call time, on
-the driver, sorts them by `when` and returns them as a LocalRelation frame
-with the Spark frame's schema: collecting it runs no Spark job. Otherwise
-it returns the lazy Spark frame, as before. The path is logged at DEBUG on
-this module's logger.
+plain parquet scan whose files hold at most _LOCAL_FRAME_MAX_ROWS rows
+(plans/scan.py), get_events reads the rows eagerly, at call time, on
+the driver, sorts them by `when` in Arrow and returns them as a
+LocalRelation frame with the Spark frame's schema: collecting it runs no
+Spark job. Otherwise it returns the lazy Spark frame, as before. The path
+is logged at DEBUG on this module's logger.
 """
 
 from __future__ import annotations
 
 import logging
 from datetime import datetime
-from operator import itemgetter
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
 from blueflood_spark.functions.datetime_parser import parse_datetime
 from blueflood_spark.plans.scan import ScanSpec, local_frame, scan_frame, through_gate
 
-log = logging.getLogger(__name__)
+if TYPE_CHECKING:
+    import pyarrow as pa
 
-_BY_WHEN = itemgetter("when")
+log = logging.getLogger(__name__)
 
 
 def get_events(
@@ -52,5 +54,9 @@ def get_events(
         where.append(("tags", "==", tags))
     spec = ScanSpec(events, partition=(), where=tuple(where), select=tuple((c, c) for c in events.columns))
     frame = scan_frame(spec).orderBy("when")
-    return through_gate(spec, lambda rows: local_frame(frame, sorted(rows, key=_BY_WHEN)),
-                        lambda: frame, log, "events read")
+
+    def on_driver(table: pa.Table) -> DataFrame:
+        # as Spark's ascending sort: nulls first; ties may come in any order
+        return local_frame(frame, table.sort_by([("when", "ascending")], null_placement="at_start"))
+
+    return through_gate(spec, on_driver, lambda: frame, log, "events read", bounded=True)

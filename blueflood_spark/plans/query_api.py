@@ -38,7 +38,7 @@ from operator import itemgetter
 from pyspark.sql import DataFrame
 
 from blueflood_spark.operators import granularity as G
-from blueflood_spark.plans.scan import Lit, ScanSpec, scan_frame, through_gate
+from blueflood_spark.plans.scan import Lit, ScanSpec, scan_frame, through_gate, to_rows
 
 log = logging.getLogger(__name__)
 
@@ -296,7 +296,7 @@ def lookup_rollup_type(catalog: DataFrame, tenant_id: str, metric_name: str) -> 
         where=(("tenant_id", "==", tenant_id), ("metric_name", "==", metric_name)),
         select=(("rollup_type", "rollup_type"),),
     )
-    rows = through_gate(spec, lambda rows: rows[:1], lambda: scan_frame(spec).limit(1).collect(),
+    rows = through_gate(spec, lambda t: to_rows(t.slice(0, 1)), lambda: scan_frame(spec).limit(1).collect(),
                         log, "rollup type lookup")
     if rows and rows[0]["rollup_type"]:
         return rows[0]["rollup_type"]
@@ -321,7 +321,7 @@ def _series_rows(
     if gran.name != "full":
         args = (rollups, tenant_id, metric_names, gran, params.from_ms, params.to_ms,
                 params.stats, rollup_type)
-        return through_gate(series_scan(*args), list, lambda: series_frame(*args).collect(),
+        return through_gate(series_scan(*args), to_rows, lambda: series_frame(*args).collect(),
                             log, "series read")
     if rollup_type != "basic":
         # the reference serves preagg FULL from its own table
@@ -343,7 +343,7 @@ def _series_rows(
             "metrics_full table) to serve it — the rollups table has no full rows"
         )
     args = (raw, tenant_id, metric_names, params.from_ms, params.to_ms, params.stats)
-    return through_gate(series_scan_full(*args), list, lambda: series_frame_full(*args).collect(),
+    return through_gate(series_scan_full(*args), to_rows, lambda: series_frame_full(*args).collect(),
                         log, "series read")
 
 

@@ -12,9 +12,12 @@ Connect, a file deleted or unreadable, an Arrow error, an endpoint's own
 SparkOnly), runs the Spark plan instead. through_gate applies this rule
 and logs the path each request took at DEBUG on the caller's logger.
 
-Endpoints that return a DataFrame wrap their driver rows with local_frame:
-a LocalRelation with the Spark frame's schema, so the caller's collect()
-runs no job and sees the same schema either way.
+The driver read hands its endpoint an Arrow table of the spec's output
+columns; to_rows turns it into Row-like dicts. Endpoints that return a
+DataFrame wrap their driver result with local_frame: a LocalRelation with
+the Spark frame's schema, so the caller's collect() runs no job and sees
+the same schema either way. Their reads are bounded: files that hold more
+than _LOCAL_FRAME_MAX_ROWS rows in all run the Spark plan.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from functools import reduce
 from operator import and_
-from typing import TypeVar
+from typing import TYPE_CHECKING, TypeVar
 from urllib.parse import unquote, urlparse
 
 from pyspark import StorageLevel
@@ -33,10 +36,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+if TYPE_CHECKING:
+    import pyarrow as pa
+
 # Largest summed size of the pruned parquet files that a request serves on
 # the driver with pyarrow.dataset instead of as a Spark job. Below it the
 # job's fixed cost dominates; CHANGES.md records the probe it was picked from.
 _DRIVER_READ_MAX_BYTES = 16 << 20
+
+# Most rows the files of a bounded driver read (through_gate's `bounded`)
+# may hold. The endpoints that answer with a LocalRelation frame (events,
+# the catalog searches) decode every row of a tenant or time range, send
+# each row they return from Python back to the JVM, and a search matches
+# each name with Python's re: past a few ten thousand rows the Spark job is
+# faster. Counted from the parquet footers, before any data is read.
+# CHANGES.md records the probe it was picked from.
+_LOCAL_FRAME_MAX_ROWS = 10_000
 
 
 @dataclass(frozen=True)
@@ -169,12 +184,16 @@ def _local_scan(spec: ScanSpec) -> tuple[list[str], list, T.StructType]:
     return sorted(files), preds, T.StructType([df.schema[c] for c in needed])
 
 
-def _read_on_driver(spec: ScanSpec, files: list[str], preds: list, schema: T.StructType) -> list[dict]:
-    """Rows of `spec` read from `files` with pyarrow.dataset: the read
+def _read_on_driver(
+    spec: ScanSpec, files: list[str], preds: list, schema: T.StructType, max_rows: int | None = None
+) -> pa.Table:
+    """`spec` read from `files` with pyarrow.dataset, as an Arrow table of
+    its output columns: Arrow applies the row filter, and the read
     schema is Spark's, converted to Arrow, so types match under a
     user-given schema; a file whose column Spark would resolve differently
     (a case-only name match, a type other than the schema's or one Spark's
-    reader widens to it) raises SparkOnly."""
+    reader widens to it) raises SparkOnly, as do files that hold more than
+    `max_rows` rows in all."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
@@ -198,18 +217,32 @@ def _read_on_driver(spec: ScanSpec, files: list[str], preds: list, schema: T.Str
                     and (got.key_type, got.item_type) == (f.type.key_type, f.type.item_type))
             ):
                 raise SparkOnly(f"{frag.path}: column {f.name} is {got}, not {f.type}")
+    if max_rows is not None:
+        nrows = sum(frag.metadata.num_rows for frag in dataset.get_fragments())
+        if nrows > max_rows:
+            raise SparkOnly(f"files hold {nrows} rows, over {max_rows}")
     cond = reduce(and_, (_OPS[op](pc.field(c), v) for c, op, v in preds)) if preds else None
     table = dataset.to_table(filter=cond)
+    return pa.table({
+        name: pa.repeat(src.value, table.num_rows) if isinstance(src, Lit) else table.column(src)
+        for name, src in spec.select
+    })
+
+
+def to_rows(table: pa.Table) -> list[dict]:
+    """A driver read's Arrow table as rows, valued as a Spark Row's
+    asDict() would be (Arrow gives a map as a list of pairs)."""
+    import pyarrow as pa
+
     cols = {}
-    for f in schema.fields:
-        vals = table.column(f.name).to_pylist()
-        if isinstance(f.dataType, T.MapType):  # Arrow gives a map as a list of pairs
+    for f in table.schema:
+        col = table.column(f.name)
+        # a string column is read through numpy: the same str / None values, ~10x faster
+        vals = col.to_numpy(zero_copy_only=False).tolist() if pa.types.is_string(f.type) else col.to_pylist()
+        if pa.types.is_map(f.type):
             vals = [None if m is None else dict(m) for m in vals]
         cols[f.name] = vals
-    n = table.num_rows
-    names = [name for name, _ in spec.select]
-    columns = [[src.value] * n if isinstance(src, Lit) else cols[src] for _, src in spec.select]
-    return [dict(zip(names, vals)) for vals in zip(*columns)]
+    return [dict(zip(cols, vals)) for vals in zip(*cols.values())]
 
 
 R = TypeVar("R")
@@ -217,16 +250,20 @@ R = TypeVar("R")
 
 def through_gate(
     spec: ScanSpec,
-    on_driver: Callable[[list[dict]], R],
+    on_driver: Callable[[pa.Table], R],
     on_spark: Callable[[], R],
     log: logging.Logger,
     what: str,
+    bounded: bool = False,
 ) -> R:
-    """on_driver(rows of `spec` read on the driver) when `spec`'s table is
-    a plain parquet scan whose pruned files total at most
-    _DRIVER_READ_MAX_BYTES, else on_spark(). Anything that fails on the
+    """on_driver(`spec` read on the driver, as an Arrow table) when
+    `spec`'s table is a plain parquet scan whose pruned files total at
+    most _DRIVER_READ_MAX_BYTES, else on_spark(). Anything that fails on the
     way to on_driver's result also runs on_spark(), so the result, or the
-    error, is the Spark plan's. The path taken is logged on `log`."""
+    error, is the Spark plan's. The path taken is logged on `log`.
+
+    bounded: on_driver answers with a LocalRelation frame (local_frame);
+    files that hold more than _LOCAL_FRAME_MAX_ROWS rows run on_spark()."""
     files: list[str] = []
     nbytes = 0
     try:
@@ -234,7 +271,8 @@ def through_gate(
         nbytes = sum(os.path.getsize(p) for p in files)
         if nbytes > _DRIVER_READ_MAX_BYTES:
             raise SparkOnly("over the size gate")
-        out = on_driver(_read_on_driver(spec, files, preds, schema))
+        max_rows = _LOCAL_FRAME_MAX_ROWS if bounded else None
+        out = on_driver(_read_on_driver(spec, files, preds, schema, max_rows))
     except SparkOnly as e:
         why = str(e)
     except Exception as e:  # no listing (Spark Connect, API drift), a file gone, an Arrow error
@@ -247,12 +285,14 @@ def through_gate(
     return on_spark()
 
 
-def local_frame(like: DataFrame, rows: list[dict]) -> DataFrame:
-    """`rows` as a LocalRelation-backed frame with `like`'s schema: its
-    collect() runs no Spark job."""
+def local_frame(like: DataFrame, data: pa.Table | list[dict]) -> DataFrame:
+    """`data` (an Arrow table with `like`'s columns, or rows) as a
+    LocalRelation-backed frame with `like`'s schema: its collect() runs no
+    Spark job."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = like.schema
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    want = to_arrow_schema(schema)
+    table = data.cast(want) if isinstance(data, pa.Table) else pa.Table.from_pylist(data, schema=want)
     return like.sparkSession.createDataFrame(table, schema=schema)

@@ -32,7 +32,13 @@ class ReadGate:
     def paths(self) -> list[str]:
         return [("driver" if "on the driver" in r.getMessage() else "spark")
                 for r in self.caplog.records
-                if r.name == self.logger and "driver read failed" not in r.getMessage()]
+                if r.name == self.logger and not r.exc_info]  # not a failure's traceback
+
+    def taken(self, call):
+        """(call(), the set of paths it logged)."""
+        self.caplog.clear()
+        out = call()
+        return out, set(self.paths())
 
     def spark_only(self, call):
         from blueflood_spark.plans import scan
@@ -43,12 +49,10 @@ class ReadGate:
 
     def both(self, call):
         """(driver result, Spark result) of `call`, asserting each path."""
-        self.caplog.clear()
-        driver = call()
-        assert self.paths() == ["driver"]
-        self.caplog.clear()
-        spark_result = self.spark_only(call)
-        assert self.paths() == ["spark"]
+        driver, paths = self.taken(call)
+        assert paths == {"driver"}
+        spark_result, paths = self.taken(lambda: self.spark_only(call))
+        assert paths == {"spark"}
         return driver, spark_result
 
 
@@ -56,3 +60,24 @@ class ReadGate:
 def read_gate(caplog):
     """ReadGate factory: read_gate(logger name)."""
     return lambda logger: ReadGate(caplog, logger)
+
+
+@pytest.fixture()
+def request_jobs(spark):
+    """request_jobs(call) -> (Spark jobs, result) of call(), run in a
+    fresh job group: the status tracker keeps earlier groups' jobs, so a
+    reused group name would count them too."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(call):
+        group = f"serve_request_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "one serve request")
+        try:
+            out = call()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run

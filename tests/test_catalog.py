@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from blueflood_spark import catalog as C
 from blueflood_spark.catalog import build_catalog, build_tokens, search_metric_names, search_metrics
+from blueflood_spark.plans import scan as S
 
 
 def cat_df(spark):
@@ -155,14 +156,18 @@ def test_search_metric_names_driver_read_matches_spark(spark, catalog_store, rea
     assert sorted(map(tuple, driver.collect())) == sorted(map(tuple, job.collect()))
 
 
-@pytest.mark.parametrize("case", ["glob [", "glob \\", "name \\r", "name \\u2028", "filtered", "cached", "hdfs"])
+@pytest.mark.parametrize("case", ["glob [", "glob \\", "name \\r", "name \\u2028", "filtered", "cached", "hdfs",
+                                  "over the row bound"])
 def test_search_outside_the_gate_takes_the_spark_path(spark, catalog_store, monkeypatch, read_gate, case):
     """Globs whose regex Python's re may read differently from Java's, a
-    tenant with line terminators in its names, and non-plain tables keep
-    the rlike plan, with the same rows as the forced Spark path."""
+    tenant with line terminators in its names, non-plain tables and files
+    of more rows than a LocalRelation answer may come from keep the rlike
+    plan, with the same rows as the forced Spark path."""
     cat = spark.read.parquet(catalog_store)
     tenant, glob = "t1", "api.host00.*"
-    if case == "glob [":
+    if case == "over the row bound":
+        monkeypatch.setattr(S, "_LOCAL_FRAME_MAX_ROWS", 5)
+    elif case == "glob [":
         glob = "api.host0[03].*"
     elif case == "glob \\":
         glob = "api\\.host00.*"
@@ -178,9 +183,8 @@ def test_search_outside_the_gate_takes_the_spark_path(spark, catalog_store, monk
     try:
         for search in (C.search_metrics, C.search_metric_names):
             call = lambda: sorted(map(tuple, search(cat, tenant, glob).collect()), key=str)  # noqa: E731
-            gate.caplog.clear()
-            got = call()
-            assert gate.paths() == ["spark"], search.__name__
+            got, paths = gate.taken(call)
+            assert paths == {"spark"}, search.__name__
             assert got == gate.spark_only(call), search.__name__
             assert got, search.__name__
         if case.startswith("name"):

@@ -99,12 +99,17 @@ def test_events_driver_read_matches_spark(spark, events_store, read_gate, case):
         assert len(got) == 42 and len(set(r[1] for r in got)) < 42  # ties on `when` are served
 
 
-@pytest.mark.parametrize("shape", ["filtered", "cached", "hdfs"])
+@pytest.mark.parametrize("shape", ["filtered", "cached", "hdfs", "over the row bound"])
 def test_events_non_plain_tables_take_the_spark_path(spark, events_store, monkeypatch, read_gate, shape):
-    """Filtered or cached frames and non-local files keep the Spark plan,
-    with the same rows as the forced Spark path."""
+    """Filtered or cached frames, non-local files and files of more rows
+    than a LocalRelation answer may come from keep the Spark plan, with
+    the same rows as the forced Spark path."""
+    from blueflood_spark.plans import scan as S
+
     df = spark.read.parquet(events_store)
-    if shape == "filtered":
+    if shape == "over the row bound":
+        monkeypatch.setattr(S, "_LOCAL_FRAME_MAX_ROWS", 5)
+    elif shape == "filtered":
         df = df.filter("what != 'e3'")
     elif shape == "cached":
         df = df.cache()
@@ -113,10 +118,24 @@ def test_events_non_plain_tables_take_the_spark_path(spark, events_store, monkey
     gate = read_gate(EA.__name__)
     call = lambda: EA.get_events(df, "t1", "yesterday", "tomorrow", now=NOW).collect()  # noqa: E731
     try:
-        got = call()
-        assert gate.paths() == ["spark"]
+        got, paths = gate.taken(call)
+        assert paths == {"spark"}
         want = gate.spark_only(call)
         assert [r["when"] for r in got] == [r["when"] for r in want]
         assert sorted(map(tuple, got), key=str) == sorted(map(tuple, want), key=str)
     finally:
         df.unpersist()
+
+
+def test_row_bound_counts_the_rows_of_the_files(spark, events_store, monkeypatch, read_gate):
+    """The bound on a LocalRelation answer counts every row the files hold
+    (52 here), from their footers, whatever the request keeps of them."""
+    from blueflood_spark.plans import scan as S
+
+    events = spark.read.parquet(events_store)
+    gate = read_gate(EA.__name__)
+    call = lambda: EA.get_events(events, "t2", None, None, "alert").collect()  # noqa: E731
+    for bound, path in ((52, "driver"), (51, "spark")):
+        monkeypatch.setattr(S, "_LOCAL_FRAME_MAX_ROWS", bound)
+        got, paths = gate.taken(call)
+        assert paths == {path} and len(got) == 3, bound

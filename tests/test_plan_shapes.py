@@ -180,7 +180,7 @@ def test_histogram_quantile_is_one_aggregation(spark):
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan, plan[:2000]
 
 
-def test_series_frames_are_unsorted_single_job_scans(spark):
+def test_series_frames_are_unsorted_single_job_scans(spark, request_jobs):
     """Serve path: series_frame/series_frame_full are plain pruned
     projections — no Sort, no shuffle Exchange (a global orderBy costs a
     range-bounds sampling job plus an exchange per request) — and one
@@ -211,33 +211,16 @@ def test_series_frames_are_unsorted_single_job_scans(spark):
         assert _shuffles(plan) == 0, plan[:2000]
         assert " Sort [" not in plan, plan[:2000]
 
-    sc = spark.sparkContext
-    params = QA.parse_params({"from": ["0"], "to": ["36000000"], "resolution": ["MIN5"]})
-    sc.setJobGroup("serve_one_view", "one get_view request")
-    try:
-        resp = QA.get_view(rollups, "t1", "m", params)
-    finally:
-        sc.setJobGroup(None, None)
-    assert resp["metadata"]["count"] == 120
-    assert len(sc.statusTracker().getJobIdsForGroup("serve_one_view")) == 1
+    jobs, resp = request_jobs(_one_view(rollups))
+    assert (jobs, resp["metadata"]["count"]) == (1, 120)
 
 
-def _view_jobs(spark, rollups) -> int:
-    """Spark jobs one get_view request over `rollups` launches."""
-    import uuid
-
+def _one_view(rollups):
+    """One get_view request over `rollups`: 120 five-minute points of t1/m."""
     from blueflood_spark.plans import query_api as QA
 
-    sc = spark.sparkContext
-    group = f"serve_one_view_{uuid.uuid4().hex}"
     params = QA.parse_params({"from": ["0"], "to": ["36000000"], "resolution": ["MIN5"]})
-    sc.setJobGroup(group, "one get_view request")
-    try:
-        resp = QA.get_view(rollups, "t1", "m", params)
-    finally:
-        sc.setJobGroup(None, None)
-    assert resp["metadata"]["count"] == 120
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return lambda: QA.get_view(rollups, "t1", "m", params)
 
 
 @pytest.fixture()
@@ -254,14 +237,15 @@ def small_rollups_store(spark, tmp_path):
     return path
 
 
-def test_small_parquet_view_runs_no_spark_job(spark, small_rollups_store):
+def test_small_parquet_view_runs_no_spark_job(spark, small_rollups_store, request_jobs):
     """A get_view over a small plain parquet scan is read on the driver:
     the request launches no Spark job."""
-    assert _view_jobs(spark, spark.read.parquet(small_rollups_store)) == 0
+    jobs, resp = request_jobs(_one_view(spark.read.parquet(small_rollups_store)))
+    assert (jobs, resp["metadata"]["count"]) == (0, 120)
 
 
 @pytest.mark.parametrize("shape", ["filtered", "unioned", "cached"])
-def test_non_plain_parquet_view_runs_one_spark_job(spark, small_rollups_store, shape):
+def test_non_plain_parquet_view_runs_one_spark_job(spark, small_rollups_store, request_jobs, shape):
     """Filtered, unioned or cached parquet frames are not plain scans:
     their get_view still runs as exactly one Spark job."""
     df = spark.read.parquet(small_rollups_store)
@@ -273,7 +257,8 @@ def test_non_plain_parquet_view_runs_one_spark_job(spark, small_rollups_store, s
         df = df.cache()
         df.count()
     try:
-        assert _view_jobs(spark, df) == 1
+        jobs, resp = request_jobs(_one_view(df))
+        assert (jobs, resp["metadata"]["count"]) == (1, 120)
     finally:
         df.unpersist()
 
@@ -313,44 +298,37 @@ def _serve_calls(events, catalog) -> dict:
     }
 
 
-def _request_jobs(spark, call) -> tuple[int, object, int]:
-    """(Spark jobs, optimized plan class, rows) of one request: the
-    endpoint call plus the caller's collect(), in a fresh job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"serve_one_request_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "one serve request")
-    try:
+def _collected(call):
+    """A frame-returning request as its caller makes it: the endpoint
+    call, then collect(). Returns (optimized plan class, rows)."""
+    def run():
         df = call()
-        rows = df.collect()
-    finally:
-        sc.setJobGroup(None, None)
-    plan = df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), plan, len(rows)
+        return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName(), df.collect()
+
+    return run
 
 
 @pytest.mark.parametrize("kind", ["events", "search", "names"])
-def test_small_parquet_events_and_search_run_no_spark_job(spark, small_serve_tables, kind):
+def test_small_parquet_events_and_search_run_no_spark_job(spark, small_serve_tables, request_jobs, kind):
     """get_events, search_metrics and search_metric_names over small plain
     parquet tables return a LocalRelation read on the driver: the request
     launches no Spark job."""
     events = spark.read.parquet(small_serve_tables["events"])
     catalog = spark.read.parquet(small_serve_tables["catalog"])
-    jobs, plan, rows = _request_jobs(spark, _serve_calls(events, catalog)[kind])
+    jobs, (plan, rows) = request_jobs(_collected(_serve_calls(events, catalog)[kind]))
     assert (jobs, plan) == (0, "LocalRelation")
-    assert rows > 0
+    assert rows
 
 
 @pytest.mark.parametrize("kind", ["events", "search", "names"])
-def test_filtered_events_and_search_run_spark_jobs(spark, small_serve_tables, kind):
+def test_filtered_events_and_search_run_spark_jobs(spark, small_serve_tables, request_jobs, kind):
     """Over a filtered frame (not a plain scan) the same requests keep
     their Spark plan and run at least one job."""
     events = spark.read.parquet(small_serve_tables["events"]).filter("what != ''")
     catalog = spark.read.parquet(small_serve_tables["catalog"]).filter("unit != ''")
-    jobs, plan, rows = _request_jobs(spark, _serve_calls(events, catalog)[kind])
+    jobs, (plan, rows) = request_jobs(_collected(_serve_calls(events, catalog)[kind]))
     assert jobs >= 1 and plan != "LocalRelation"
-    assert rows > 0
+    assert rows
 
 
 def test_pagerank_runs_as_one_job_with_lazy_marks(spark):

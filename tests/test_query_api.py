@@ -8,7 +8,6 @@ from blueflood_spark.operators import granularity as G
 from blueflood_spark.operators import repair as REP
 from blueflood_spark.operators import rollup as R
 from blueflood_spark.plans import query_api as Q
-from blueflood_spark.plans import scan as S
 
 MIN = 60_000
 
@@ -290,14 +289,9 @@ def _series_calls(rollups, raw, res):
     return calls
 
 
-def _paths_taken(caplog) -> set[str]:
-    return {("driver" if "on the driver" in r.getMessage() else "spark")
-            for r in caplog.records if r.name == Q.__name__}
-
-
 @pytest.mark.parametrize("res", PARITY_RES)
 @pytest.mark.parametrize("layout", ["tables", "sinks"])
-def test_driver_read_matches_spark_job(parity_stores, monkeypatch, caplog, layout, res):
+def test_driver_read_matches_spark_job(parity_stores, read_gate, layout, res):
     """get_view / get_views_multi answer with identical JSON whether the
     rows come from the driver read or from the Spark job (forced by a size
     gate of 0): FULL's literals, numPoints == 0 nulling, percentiles,
@@ -305,17 +299,10 @@ def test_driver_read_matches_spark_job(parity_stores, monkeypatch, caplog, layou
     import json
 
     rollups, raw = parity_stores[layout]
+    gate = read_gate(Q.__name__)
     seen = set()
     for name, call in _series_calls(rollups, raw, res):
-        with caplog.at_level("DEBUG", logger=Q.__name__):
-            caplog.clear()
-            driver = json.dumps(call())
-            assert _paths_taken(caplog) == {"driver"}, name
-            with monkeypatch.context() as m:
-                m.setattr(S, "_DRIVER_READ_MAX_BYTES", 0)
-                caplog.clear()
-                job = json.dumps(call())
-                assert _paths_taken(caplog) == {"spark"}, name
+        driver, job = gate.both(lambda: json.dumps(call()))
         assert driver == job, name
         seen.add(driver)
     text = "".join(seen)
@@ -340,14 +327,13 @@ def small_store(spark, rollups, tmp_path):
     return path
 
 
-def test_driver_read_degrades_without_file_listing(spark, small_store, monkeypatch, caplog):
+def test_driver_read_degrades_without_file_listing(spark, small_store, monkeypatch, read_gate):
     """No inputFiles() (Spark Connect, API drift), an inputFiles() that
     raises, or a file that is not local: the Spark job serves the request."""
     df = spark.read.parquet(small_store)
     call = _store_view(df)
-    with monkeypatch.context() as m:
-        m.setattr(S, "_DRIVER_READ_MAX_BYTES", 0)
-        expected = call()
+    gate = read_gate(Q.__name__)
+    expected = gate.spark_only(call)
     assert expected["metadata"]["count"] == 12
     cls = type(df)
 
@@ -359,15 +345,13 @@ def test_driver_read_degrades_without_file_listing(spark, small_store, monkeypat
         lambda m: m.setattr(cls, "inputFiles", boom),
         lambda m: m.setattr(cls, "inputFiles", lambda self: ["hdfs://nn:8020/rollups/resolution=5m/part-0.parquet"]),
     ):
-        with monkeypatch.context() as m, caplog.at_level("DEBUG", logger=Q.__name__):
+        with monkeypatch.context() as m:
             patch(m)
-            caplog.clear()
-            assert call() == expected
-            assert _paths_taken(caplog) == {"spark"}
+            assert gate.taken(call) == (expected, {"spark"})
 
 
 @pytest.mark.parametrize("damage", ["deleted", "corrupt"])
-def test_driver_read_degrades_to_the_spark_error(spark, small_store, caplog, damage):
+def test_driver_read_degrades_to_the_spark_error(spark, small_store, read_gate, damage):
     """A file deleted after listing (os.stat fails) or one Arrow cannot
     read: the request runs the Spark job, which raises today's error."""
     import glob
@@ -381,41 +365,32 @@ def test_driver_read_degrades_to_the_spark_error(spark, small_store, caplog, dam
         with open(victim, "wb") as fh:
             fh.write(b"not a parquet file")
     call = _store_view(df)
+    gate = read_gate(Q.__name__)
     errors = []
-    for gate in (S._DRIVER_READ_MAX_BYTES, 0):
-        with caplog.at_level("DEBUG", logger=Q.__name__), pytest.MonkeyPatch.context() as m:
-            m.setattr(S, "_DRIVER_READ_MAX_BYTES", gate)
-            caplog.clear()
-            with pytest.raises(Exception) as e:
-                call()
-            assert _paths_taken(caplog) == {"spark"}
+    for run in (call, lambda: gate.spark_only(call)):
+        gate.caplog.clear()
+        with pytest.raises(Exception) as e:
+            run()
+        assert set(gate.paths()) == {"spark"}
         errors.append(type(e.value))
     assert errors[0] is errors[1], errors
 
 
-def test_lookup_rollup_type_reads_the_catalog_on_the_driver(spark, tmp_path, read_gate):
+def test_lookup_rollup_type_reads_the_catalog_on_the_driver(spark, tmp_path, read_gate, request_jobs):
     """The (tenant, name) catalog lookup of get_view runs no Spark job on a
     small plain parquet catalog and answers as the Spark plan does: the
     stored type, or basic when the row is missing or its type is null."""
-    import uuid
-
     path = str(tmp_path / "catalog")
     spark.createDataFrame(
         [("t1", "m.g", "B", "gauge"), ("t1", "m.n", "B", None), ("t2", "m.g", None, "timer")],
         "tenant_id string, metric_name string, unit string, rollup_type string",
     ).write.parquet(path)
     cat = spark.read.parquet(path)
-    sc = spark.sparkContext
     gate = read_gate(Q.__name__)
     lookups = [("t1", "m.g"), ("t1", "m.n"), ("t1", "m.missing"), ("t2", "m.g"), ("t3", "m.g")]
     for tenant, name in lookups:
-        group = f"lookup_{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "one rollup type lookup")
-        try:
-            assert Q.lookup_rollup_type(cat, tenant, name)
-        finally:
-            sc.setJobGroup(None, None)
-        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        jobs, answer = request_jobs(lambda: Q.lookup_rollup_type(cat, tenant, name))
+        assert answer and jobs == 0
         driver, job = gate.both(lambda: Q.lookup_rollup_type(cat, tenant, name))
         assert driver == job
     assert [Q.lookup_rollup_type(cat, t, n) for t, n in lookups] == ["gauge", "basic", "basic", "timer", "basic"]
