@@ -6618,7 +6618,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # green at its latest stamp). The r11 window, in priority order:
     # (P1) the 9 rows CHANGED THIS round — tools/changed_since_stamp.py
     # at r11 HEAD attributes exactly these to non-comment code changes
-    # (session.py fitted_loop_width / dedup.py _cc_distributed /
+    # (session.py loop-width fit / dedup.py _cc_distributed /
     # graph.py pagerank / similarity.py embedding_near_dups closures):
     # bf_kmv_overlap, llm_pipeline_output, llm_dedup_clusters,
     # llm_mmr_diversify, llm_dup_pagerank, llm_embedding_dup_clusters,

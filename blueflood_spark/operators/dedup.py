@@ -525,7 +525,7 @@ def _cc_distributed(
     caller's session, ever; the final singleton-attach join below plans
     back in the caller's session under its own conf.
     """
-    from blueflood_spark.session import fitted_loop_width, loop_session, rebind
+    from blueflood_spark.session import fit_loop_width, loop_session, rebind
 
     spark = pairs.sparkSession
     child = loop_session(spark)
@@ -541,98 +541,94 @@ def _cc_distributed(
     # the width must fit the data before any loop plan is built. The
     # count materializes the pair checkpoint as its own job; the pair
     # subtree still runs exactly once (it used to run inside the first
-    # fixpoint job instead). Fitted from the symmetrized edge count,
-    # capped at the configured width (no-op at corpus scale); scoped by
-    # fitted_loop_width (r11: restores the parent's stamped width, and
-    # no-ops on the degraded parent==clone path) — a concurrent loop
-    # planner on the same clone may transiently plan at the fitted
-    # value, which can only mis-size its tasks, never its rows
-    # (width-independence is oracle-proven by the SPARK_GRAFT_SHUFFLE=3
-    # arm).
+    # fixpoint job instead). Fitted from the symmetrized edge count and
+    # capped at the caller's width (no-op at corpus scale), on this
+    # loop's own clone: nothing to restore, and no other loop plans at
+    # it. A no-op on the degraded parent==clone path.
     if _n_pairs is None:
         _n_pairs = pairs.count()
-    with fitted_loop_width(child, 2 * _n_pairs):
-        edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        # The edge list is STATIC across rounds but every round joins it on
-        # dst — pre-partition (and pre-sort) it by the join key ONCE before
-        # the checkpoint: LogicalRDD preserves outputPartitioning/ordering,
-        # so each round's sort-merge join reads the sym side exchange-free
-        # and sort-free (textbook Pregel edge placement; one exchange+sort
-        # micro-stage saved per round, ~10 rounds at bench SF, and at 100 TB
-        # this is the difference between shuffling the edge list O(log d)
-        # times and once). Labels bit-identical — partition placement and
-        # intra-partition order don't reach any aggregate.
-        sym = (
-            edges.unionByName(
-                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition("dst")
-            .sortWithinPartitions("dst")
-            .localCheckpoint(eager=False)
+    fit_loop_width(child, spark, 2 * _n_pairs)
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    # The edge list is STATIC across rounds but every round joins it on
+    # dst — pre-partition (and pre-sort) it by the join key ONCE before
+    # the checkpoint: LogicalRDD preserves outputPartitioning/ordering,
+    # so each round's sort-merge join reads the sym side exchange-free
+    # and sort-free (textbook Pregel edge placement; one exchange+sort
+    # micro-stage saved per round, ~10 rounds at bench SF, and at 100 TB
+    # this is the difference between shuffling the edge list O(log d)
+    # times and once). Labels bit-identical — partition placement and
+    # intra-partition order don't reach any aggregate.
+    sym = (
+        edges.unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        # Iterate over only the nodes that appear in SOME pair: every other
-        # node is a singleton whose label is itself, attached by one left
-        # join at the end. At 100 TB the dup graph's vertex set is a small
-        # fraction of the corpus — propagating labels for every corpus id
-        # each round shuffles the whole id space O(log d) times for rows
-        # that can never change.
-        labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
-            "label", F.col("node")
+        .repartition("dst")
+        .sortWithinPartitions("dst")
+        .localCheckpoint(eager=False)
+    )
+    # Iterate over only the nodes that appear in SOME pair: every other
+    # node is a singleton whose label is itself, attached by one left
+    # join at the end. At 100 TB the dup graph's vertex set is a small
+    # fraction of the corpus — propagating labels for every corpus id
+    # each round shuffles the whole id space O(log d) times for rows
+    # that can never change.
+    labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
+        "label", F.col("node")
+    )
+    converged = False
+    for round_no in range(1, max_iterations + 1):
+        neighbor_min = (
+            sym.join(labels, sym.dst == labels.node)
+            .groupBy("src")
+            .agg(F.min("label").alias("nbr_label"))
         )
-        converged = False
-        for round_no in range(1, max_iterations + 1):
-            neighbor_min = (
-                sym.join(labels, sym.dst == labels.node)
-                .groupBy("src")
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            # carry the pre-round label through so convergence is a plain
-            # column compare on the checkpointed result — no extra join+
-            # shuffle per round just to detect the fixpoint
-            prop = labels.join(neighbor_min, labels.node == neighbor_min.src, "left").select(
+        # carry the pre-round label through so convergence is a plain
+        # column compare on the checkpointed result — no extra join+
+        # shuffle per round just to detect the fixpoint
+        prop = labels.join(neighbor_min, labels.node == neighbor_min.src, "left").select(
+            "node",
+            F.col("label").alias("old_label"),
+            F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
+                "label"
+            ),
+        )
+        # (r9 negative results, both measured on the semantic dup graph,
+        # outputs md5-identical — the fixpoint is unique so round
+        # structure is free to vary: (a) a SECOND compression join per
+        # round did not cut rounds — convergence is propagation-bound,
+        # not compression-bound (still 5 checks, per-round cost ~3×);
+        # (b) a SECOND propagation hop per round DID halve the checks
+        # (5 → 3) but lost anyway — interleaved A/B 4.49 s vs 5.68 s —
+        # because the deeper per-round plan (extra edge join + agg +
+        # construction) costs more than the saved barriers at any SF
+        # where the round's fixed cost rivals its data cost. One hop,
+        # one doubling stays.)
+        lab2 = prop.select(F.col("node").alias("n2"), F.col("label").alias("l2"))
+        stepped = (
+            prop.join(lab2, prop.label == lab2.n2, "left")
+            .select(
                 "node",
-                F.col("label").alias("old_label"),
-                F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
+                "old_label",
+                F.least(F.col("label"), F.coalesce(F.col("l2"), F.col("label"))).alias(
                     "label"
                 ),
             )
-            # (r9 negative results, both measured on the semantic dup graph,
-            # outputs md5-identical — the fixpoint is unique so round
-            # structure is free to vary: (a) a SECOND compression join per
-            # round did not cut rounds — convergence is propagation-bound,
-            # not compression-bound (still 5 checks, per-round cost ~3×);
-            # (b) a SECOND propagation hop per round DID halve the checks
-            # (5 → 3) but lost anyway — interleaved A/B 4.49 s vs 5.68 s —
-            # because the deeper per-round plan (extra edge join + agg +
-            # construction) costs more than the saved barriers at any SF
-            # where the round's fixed cost rivals its data cost. One hop,
-            # one doubling stays.)
-            lab2 = prop.select(F.col("node").alias("n2"), F.col("label").alias("l2"))
-            stepped = (
-                prop.join(lab2, prop.label == lab2.n2, "left")
-                .select(
-                    "node",
-                    "old_label",
-                    F.least(F.col("label"), F.coalesce(F.col("l2"), F.col("label"))).alias(
-                        "label"
-                    ),
-                )
-                .localCheckpoint(eager=False)
-            )
-            labels = stepped.select("node", "label")
-            # ONE job per CHECKED round: the full-scan aggregate
-            # materializes the lazy checkpoint(s) AND answers the
-            # fixpoint question (an eager checkpoint + separate count
-            # was two job launches per round). Checked every 2nd round —
-            # odd rounds launch no job at all; their work rides inside
-            # the next even round's aggregate.
-            if round_no % 2 == 0 or round_no == max_iterations:
-                changed = stepped.agg(
-                    F.max((F.col("label") != F.col("old_label")).cast("int"))
-                ).first()[0]
-                if not changed:
-                    converged = True
-                    break
+            .localCheckpoint(eager=False)
+        )
+        labels = stepped.select("node", "label")
+        # ONE job per CHECKED round: the full-scan aggregate
+        # materializes the lazy checkpoint(s) AND answers the
+        # fixpoint question (an eager checkpoint + separate count
+        # was two job launches per round). Checked every 2nd round —
+        # odd rounds launch no job at all; their work rides inside
+        # the next even round's aggregate.
+        if round_no % 2 == 0 or round_no == max_iterations:
+            changed = stepped.agg(
+                F.max((F.col("label") != F.col("old_label")).cast("int"))
+            ).first()[0]
+            if not changed:
+                converged = True
+                break
     if not converged:
         raise RuntimeError(
             f"connected components did not converge within {max_iterations} iterations"

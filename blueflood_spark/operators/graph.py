@@ -114,12 +114,13 @@ def pagerank(
     exchanges plan at the fitted width too and `ed` materializes inside
     the caller's first action instead of as a separate job. When None,
     pagerank prices itself with one count as before."""
-    from blueflood_spark.session import fitted_loop_width, loop_session, rebind
+    from blueflood_spark.session import fit_loop_width, loop_session, rebind
 
     if n_iter < 1:
         raise ValueError(f"pagerank requires n_iter >= 1, got {n_iter}")
-    caller = caller or edges.sparkSession
-    child = loop_session(edges.sparkSession)
+    parent = edges.sparkSession
+    caller = caller or parent
+    child = loop_session(parent)
     edges = rebind(edges, child)
     nodes = rebind(nodes, child)
     base = scale * (DAMP_DEN - DAMP_NUM) // DAMP_DEN
@@ -155,54 +156,54 @@ def pagerank(
     # degree join then plans at the fitted width too, materializing
     # inside the caller's first action); self-priced with one count
     # otherwise (which materializes the edge checkpoint as its own job —
-    # the edge subtree still runs exactly once). Capped at the
-    # configured width, so corpus-scale inputs keep the production
-    # setting. Scoped by fitted_loop_width (r11: restores the parent's
-    # stamped width; no-ops on the degraded parent==clone path; width is
-    # oracle-proven result-independent — SPARK_GRAFT_SHUFFLE=3 arm).
+    # the edge subtree still runs exactly once). Capped at the parent's
+    # width, so corpus-scale inputs keep the production setting. Set on
+    # this call's own clone, so nothing is restored (a no-op on the
+    # degraded parent==clone path; width is oracle-proven
+    # result-independent — SPARK_GRAFT_SHUFFLE=3 arm).
     ed = None
     if n_edges is None:
         ed = _build_ed()
         n_edges = ed.count()
-    with fitted_loop_width(child, n_edges):
-        if ed is None:
-            ed = _build_ed()
-        # `symmetric=True` (caller asserts src-set == dst-set, true for any
-        # symmetrized undirected graph) halves the distinct's input: the
-        # src side alone already enumerates every edge-touched node
-        endpoints = (
-            ed.select("src")
-            if symmetric
-            else ed.select("src").unionByName(ed.select(F.col("dst").alias("src")))
+    fit_loop_width(child, parent, n_edges)
+    if ed is None:
+        ed = _build_ed()
+    # `symmetric=True` (caller asserts src-set == dst-set, true for any
+    # symmetrized undirected graph) halves the distinct's input: the
+    # src side alone already enumerates every edge-touched node
+    endpoints = (
+        ed.select("src")
+        if symmetric
+        else ed.select("src").unionByName(ed.select(F.col("dst").alias("src")))
+    )
+    touched = (
+        endpoints.distinct()
+        .join(ids, ids["id"] == F.col("src"), "left_semi")
+        .select(F.col("src").alias("id"))
+        .localCheckpoint(eager=False)  # every round's left side; one subtree
+    )
+    ranks = touched.select("id", F.lit(scale).cast("long").alias("rank"))
+    for i in range(n_iter):
+        inbound = (
+            ed.join(ranks, ed["src"] == ranks["id"])
+            .select(F.col("dst").alias("id"), F.expr("rank DIV deg").alias("c"))
+            .groupBy("id")
+            .agg(F.sum("c").alias("s"))
         )
-        touched = (
-            endpoints.distinct()
-            .join(ids, ids["id"] == F.col("src"), "left_semi")
-            .select(F.col("src").alias("id"))
-            .localCheckpoint(eager=False)  # every round's left side; one subtree
+        ranks = touched.join(inbound, "id", "left").select(
+            "id",
+            (
+                F.lit(base)
+                + F.expr(f"COALESCE(s, 0L) * {DAMP_NUM} DIV {DAMP_DEN}")
+            ).cast("long").alias("rank"),
         )
-        ranks = touched.select("id", F.lit(scale).cast("long").alias("rank"))
-        for i in range(n_iter):
-            inbound = (
-                ed.join(ranks, ed["src"] == ranks["id"])
-                .select(F.col("dst").alias("id"), F.expr("rank DIV deg").alias("c"))
-                .groupBy("id")
-                .agg(F.sum("c").alias("s"))
-            )
-            ranks = touched.join(inbound, "id", "left").select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"COALESCE(s, 0L) * {DAMP_NUM} DIV {DAMP_DEN}")
-                ).cast("long").alias("rank"),
-            )
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iter:
-                ranks = ranks.localCheckpoint(eager=False)
-        # one extra LAZY mark on the final ranks (no job, blocks cached
-        # on first compute): it pins the post-cadence tail rounds'
-        # physical plans inside the clone at the fitted width — without
-        # it they plan under the caller's conf at full width
-        ranks = ranks.localCheckpoint(eager=False)
+        if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iter:
+            ranks = ranks.localCheckpoint(eager=False)
+    # one extra LAZY mark on the final ranks (no job, blocks cached
+    # on first compute): it pins the post-cadence tail rounds'
+    # physical plans inside the clone at the fitted width — without
+    # it they plan under the caller's conf at full width
+    ranks = ranks.localCheckpoint(eager=False)
     # isolated nodes: constant closed-form rank, one join, zero rounds
     out = ids.join(ranks, "id", "left").select(
         "id", F.coalesce(F.col("rank"), F.lit(base).cast("long")).alias("rank")

@@ -594,15 +594,13 @@ def kmv_pair_overlap(
     # corpus pass (count pre-filter + collect_set agg + fallback); the
     # pair stage reads it from both self-join sides, so materialize it
     # ONCE (lazy localCheckpoint — the self-join-subtree rule). The mark
-    # happens in the AQE-off loop-session clone (session.loop_session):
-    # under AQE, localCheckpoint(eager=False) executes every shuffle
-    # stage of the sketch subtree at mark time, one driver-scheduled job
-    # each (~12 jobs per bf_kmv_overlap — the _cc_distributed lesson,
-    # dedup.py). Marked statically, the subtree runs as a couple of jobs
-    # when the pair stage first reads it; plan and rows unchanged. The
-    # clone replaces r7's toggle on the caller's session, which could
-    # race on restore under the bench's concurrent arm (r7 ADVICE) and
-    # briefly stripped AQE from unrelated concurrent queries.
+    # happens in an AQE-off clone that only this call uses
+    # (session.loop_session): under AQE, localCheckpoint(eager=False)
+    # executes every shuffle stage of the sketch subtree at mark time,
+    # one driver-scheduled job each (~12 jobs per bf_kmv_overlap — the
+    # _cc_distributed lesson, dedup.py). Marked statically, the subtree
+    # runs as a couple of jobs when the pair stage first reads it; plan
+    # and rows unchanged, and the caller's own conf is never touched.
     from blueflood_spark.session import loop_session, rebind
 
     spark = df.sparkSession

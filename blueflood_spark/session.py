@@ -8,9 +8,7 @@ maxPartitionBytes would scale with executor count, not be hardcoded.
 
 from __future__ import annotations
 
-import contextlib
 import os
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +30,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", os.environ.get("SPARK_GRAFT_AQE", "true"))
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -77,18 +75,20 @@ def get_spark(
 # queryExecution.toRdd, and AQE's toRdd EXECUTES every shuffle stage of
 # the subtree right then, one driver-scheduled job each (the r7 finding
 # — 85 jobs per connected-components query). Iterative loops therefore
-# need AQE off while they mark. r7 toggled spark.sql.adaptive.enabled on
-# the CALLER's session (restore in finally) — a session-global mutation
-# with two documented costs: a query planned CONCURRENTLY in the same
-# session during the loop planned without AQE, and two overlapping
-# toggles could each capture the other's "false" and leave AQE off for
-# the rest of the session (the r7 ADVICE restore-race). Instead, loops
-# now run in a dedicated CLONE of the caller's session whose AQE is
-# permanently off: no toggle, no restore, no race — concurrent loops
-# simply share the clone, and the caller's session is never mutated.
-
-_LOOP_SESSIONS: dict = {}
-_LOOP_LOCK = threading.Lock()
+# need AQE off while they mark. Toggling spark.sql.adaptive.enabled on
+# the CALLER's session is session-global: a query planned concurrently
+# in that session loses AQE for the loop's duration, and two overlapping
+# toggles can each capture the other's "false" on restore. Instead each
+# loop runs in a clone of the caller's session that it alone owns: AQE
+# off from creation, the caller's planning conf copied at creation, and
+# dropped with the loop. No other loop or thread can see the clone, so
+# a loop may set its width there without a lock, a marker or a restore.
+# A fresh newSession() per loop measured no slower than one memoized
+# clone per parent (clone + rebind + lazy mark of a small aggregate:
+# median 93-101 ms fresh vs 90-98 ms memoized, two runs each; PySpark
+# 4.1.2, local[4] on a 4-core box), and after 1 000 loops the post-GC
+# heap (62 MB) and the listener bus (3 listeners) read the same as with
+# the memo.
 
 # runtime (conf.set) settings that shape loop plans or row values; the
 # clone re-merges builder-level spark.sql.* from the shared SparkConf by
@@ -100,188 +100,74 @@ _LOOP_CONF_COPY = (
     "spark.sql.session.timeZone",
 )
 
-# custom conf keys (no Spark behavior attached): `_TOKEN` stamps a uuid
-# on each parent so the memo key is collision-free (java hashCode() of
-# two live sessions can collide and silently share a clone carrying the
-# other parent's copied confs — r9 ADVICE); `_MARKER` tags a clone so
-# loop_session(clone) is idempotent instead of minting nested clones.
-_LOOP_TOKEN_KEY = "spark.blueflood.loop.token"
-_LOOP_CLONE_MARKER = "spark.blueflood.loop.clone"
-# the PARENT's configured shuffle width, stamped on the clone at every
-# loop_session(parent) access: fitted_loop_width restores from THIS and
-# fit_loop_width caps at it, not at a read of the live value — two loops
-# interleaving their set/restore on the shared clone can otherwise
-# capture each other's fitted width and leave it installed after both
-# finish (r10 ADVICE)
-_LOOP_PARENT_WIDTH_KEY = "spark.blueflood.loop.parentWidth"
-
 
 def loop_session(spark: SparkSession) -> SparkSession:
-    """AQE-off clone of `spark` for iterative fixed-point loops
+    """A new AQE-off clone of `spark` for one iterative fixed-point loop
     (connected components, PageRank, self-join-subtree checkpoint
     marks). `newSession()` shares the SparkContext, persistent catalog
-    and cached RDDs; only SQL conf and temp views are fresh. One clone
-    per (application, parent-session) pair, memoized; entries from dead
-    applications are evicted on access (same discipline as the
-    trained-artifact caches in operators/similarity.py).
-
-    Idempotent: asking for the loop session OF a loop session returns
-    it unchanged, so an operator whose caller already pre-rebound its
-    inputs into the clone (llm_dup_pagerank) reuses the same clone
-    instead of minting a nested one per app (r9 ADVICE). The caller's
-    _LOOP_CONF_COPY values are re-copied on EVERY access — a parent
-    conf.set between loops propagates to the next loop's plans (only
-    `spark.blueflood.loop.token`, a plain uuid tag with no planning
-    behavior, is ever written to the parent).
+    and cached RDDs; only SQL conf and temp views are fresh. The clone
+    takes the caller's _LOOP_CONF_COPY values as they are at this call,
+    and belongs to the caller alone: every call returns a distinct
+    clone, and asking for the loop session of a clone clones the clone.
 
     Under Spark Connect (or any session without classic-JVM internals)
     there is no clone: the parent itself is returned, rebind becomes an
     identity, and loops degrade to the plain same-session checkpoint
-    path — eager marks, correct results (the artifact-cache "Connect or
-    API drift: skip the memo" discipline)."""
+    path — eager marks, correct results."""
     try:
-        if spark.conf.get(_LOOP_CLONE_MARKER, "") == "true":
-            return spark
-        app = spark.sparkContext.applicationId
-    except Exception:  # pragma: no cover - Connect mode / API drift
+        child = spark.newSession()
+        child.conf.set("spark.sql.adaptive.enabled", "false")
+        for key in _LOOP_CONF_COPY:
+            child.conf.set(key, spark.conf.get(key))
+    except Exception:  # Connect mode / API drift
         return spark
-    with _LOOP_LOCK:
-        # token read-then-mint lives INSIDE the lock (r10 ADVICE): two
-        # threads first-calling on the same parent outside it could both
-        # see an empty token, mint different uuids, and leak one clone
-        # in the memo under the losing token until app eviction.
-        try:
-            token = spark.conf.get(_LOOP_TOKEN_KEY, "")
-            if not token:
-                token = uuid.uuid4().hex
-                spark.conf.set(_LOOP_TOKEN_KEY, token)
-        except Exception:  # pragma: no cover - Connect mode / API drift
-            return spark
-        key = (app, token)
-        for stale in [k for k in _LOOP_SESSIONS if k[0] != app]:
-            del _LOOP_SESSIONS[stale]
-        child = _LOOP_SESSIONS.get(key)
-        if child is None:
-            child = spark.newSession()
-            child.conf.set("spark.sql.adaptive.enabled", "false")
-            child.conf.set(_LOOP_CLONE_MARKER, "true")
-            _LOOP_SESSIONS[key] = child
-        for conf_key in _LOOP_CONF_COPY:
-            try:
-                child.conf.set(conf_key, spark.conf.get(conf_key))
-            except Exception:
-                pass
-        try:
-            child.conf.set(
-                _LOOP_PARENT_WIDTH_KEY,
-                spark.conf.get("spark.sql.shuffle.partitions"),
-            )
-        except Exception:
-            pass
-        return child
+    return child
 
 
 # rows per loop-shuffle partition for fit_loop_width: 2e6 rows of
 # 16-24 B label/edge tuples ≈ 32-48 MB — the same ballpark as AQE's
 # advisory partition size, which is the mechanism this replaces.
-_LOOP_ROWS_PER_PARTITION_KEY = "spark.blueflood.loop.rowsPerPartition"
-_LOOP_ROWS_PER_PARTITION_DEFAULT = 2_000_000
+_LOOP_ROWS_PER_PARTITION = 2_000_000
 
 
-def fit_loop_width(n_rows: int, session: SparkSession) -> int | None:
-    """Shuffle width for a fixpoint loop's exchanges, derived from the
-    MEASURED row count of the loop's largest frame (the optimization
-    guide's rule: derive partitioning from input size, never from a
-    constant tuned for one box). The AQE-off loop clone plans every
-    round's exchange statically, so it cannot coalesce post-shuffle
-    partitions at runtime the way the caller's AQE does — without this,
-    a loop over a few thousand label rows pays conf-width near-empty
-    tasks in EVERY round stage (measured: llm_embedding_dup_clusters
-    −50%, llm_dup_pagerank −25% wall min-vs-min when the loop width
-    fits the data; sf0.1, 3-round interleaved A/B, every new-arm run
-    of the CC query beat every old-arm run).
+def fit_loop_width(
+    child: SparkSession, parent: SparkSession, n_rows: int
+) -> int | None:
+    """Set the loop clone `child`'s shuffle width from the MEASURED row
+    count of the loop's largest frame (the optimization guide's rule:
+    derive partitioning from input size, never from a constant tuned
+    for one box), and return it. The AQE-off clone plans every round's
+    exchange statically, so it cannot coalesce post-shuffle partitions
+    at runtime the way the caller's AQE does — without this, a loop over
+    a few thousand label rows pays conf-width near-empty tasks in EVERY
+    round stage (measured: llm_embedding_dup_clusters −50%,
+    llm_dup_pagerank −25% wall min-vs-min when the loop width fits the
+    data; sf0.1, 3-round interleaved A/B, every new-arm run of the CC
+    query beat every old-arm run).
 
-    Width = ceil(n_rows / rowsPerPartition) clamped to [1, conf width]:
-    at corpus scale the clamp returns the CONFIGURED width unchanged —
-    the production setting stays authoritative, exactly like AQE
-    coalescing which only ever merges below-target partitions. On a loop
-    clone the conf width is the parent's stamped width
-    (_LOOP_PARENT_WIDTH_KEY), not the clone's live value: a concurrent
-    loop may have installed its own tiny fitted width there, and capping
-    at that would hold this whole loop at it. The row
-    target is conf-tunable (spark.blueflood.loop.rowsPerPartition).
-    Loop results are width-independent (integer min/sum fixpoints; the
-    SPARK_GRAFT_SHUFFLE=3 oracle arm proves it), so a mis-fit can only
-    cost time, never rows.
+    Width = ceil(n_rows / _LOOP_ROWS_PER_PARTITION) clamped to
+    [1, parent's width]: at corpus scale the clamp returns the
+    CONFIGURED width unchanged — the production setting stays
+    authoritative, exactly like AQE coalescing which only ever merges
+    below-target partitions. Loop results are width-independent
+    (integer min/sum fixpoints; the SPARK_GRAFT_SHUFFLE=3 oracle arm
+    proves it), so a mis-fit can only cost time, never rows. Nothing is
+    restored: the clone is the loop's own.
 
-    Returns None when the session's configured width cannot be read
-    (Connect mode / API drift) — the caller must then skip the
-    set/restore entirely rather than install a guessed width over
-    whatever the session actually had (r10 ADVICE; the old fallback
-    silently wrote a hardcoded 200)."""
-    try:
-        conf_width = int(
-            session.conf.get(_LOOP_PARENT_WIDTH_KEY, "")
-            or session.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:  # pragma: no cover - Connect mode / API drift
+    Sets nothing and returns None when `child is parent` (the Connect
+    fallback of loop_session: fitting there would shrink the CALLER's
+    width for every query it plans) or when the parent's width cannot
+    be read — a guessed width is never installed."""
+    if child is parent:
         return None
     try:
-        target = int(
-            session.conf.get(
-                _LOOP_ROWS_PER_PARTITION_KEY,
-                str(_LOOP_ROWS_PER_PARTITION_DEFAULT),
-            )
-        )
-    except Exception:
-        target = _LOOP_ROWS_PER_PARTITION_DEFAULT
-    target = max(1, target)
-    fitted = (max(0, n_rows) + target - 1) // target
-    return max(1, min(fitted, conf_width))
-
-
-@contextlib.contextmanager
-def fitted_loop_width(child: SparkSession, n_rows: int):
-    """Scoped fit of the loop clone's shuffle width to a measured row
-    count (fit_loop_width), with the three r10-ADVICE hazards closed:
-
-    - NO-OP when `child` is not actually a loop clone (no clone marker):
-      under Spark Connect / API drift loop_session() returns the parent
-      itself, and fitting there would transiently shrink the CALLER's
-      live width for every concurrently-planned query.
-    - NO-OP when the width cannot be read (fit_loop_width → None): never
-      installs a guessed width.
-    - Restores the PARENT's stamped width (_LOOP_PARENT_WIDTH_KEY, set
-      at every loop_session(parent) access), not the pre-loop live read:
-      two loops interleaving set/restore on the shared clone would each
-      capture the other's fitted value and leave a stale tiny width
-      installed after both finish. Mid-flight a concurrent loop may
-      still plan at this loop's fitted width — perf-only by design
-      (fixpoint results are width-independent, SPARK_GRAFT_SHUFFLE=3
-      oracle arm).
-
-    Nesting fitted scopes on one clone is unsupported: the inner scope's
-    exit restores the parent's width, so the outer scope would plan its
-    remaining rounds at that width instead of its own fit."""
-    width_key = "spark.sql.shuffle.partitions"
-    try:
-        is_clone = child.conf.get(_LOOP_CLONE_MARKER, "") == "true"
-    except Exception:  # pragma: no cover - Connect mode / API drift
-        is_clone = False
-    fitted = fit_loop_width(n_rows, child) if is_clone else None
-    if fitted is None:
-        yield
-        return
-    pre = child.conf.get(width_key)
-    child.conf.set(width_key, str(fitted))
-    try:
-        yield
-    finally:
-        try:
-            restore = child.conf.get(_LOOP_PARENT_WIDTH_KEY, "") or pre
-        except Exception:  # pragma: no cover
-            restore = pre
-        child.conf.set(width_key, restore)
+        parent_width = int(parent.conf.get("spark.sql.shuffle.partitions"))
+    except Exception:  # Connect mode / API drift
+        return None
+    fitted = (max(0, n_rows) + _LOOP_ROWS_PER_PARTITION - 1) // _LOOP_ROWS_PER_PARTITION
+    width = max(1, min(fitted, parent_width))
+    child.conf.set("spark.sql.shuffle.partitions", str(width))
+    return width
 
 
 def rebind(df: DataFrame, session: SparkSession) -> DataFrame:

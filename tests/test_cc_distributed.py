@@ -113,11 +113,11 @@ def test_cc_distributed_never_touches_caller_aqe(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
     D.connected_components(pairs, ids, driver_threshold=0).count()
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
-    # the clone itself has AQE off, memoized per caller session, and
+    # the clone itself has AQE off, is new on every call, and
     # inherits the caller's shuffle width + timezone
     child = loop_session(spark)
     assert child.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert child is loop_session(spark)
+    assert child is not loop_session(spark)
     assert child.conf.get("spark.sql.shuffle.partitions") == spark.conf.get(
         "spark.sql.shuffle.partitions"
     )

@@ -11,11 +11,12 @@ from pyspark.sql import functions as F
 from blueflood_spark.session import loop_session, rebind
 
 
-def test_clone_is_aqe_off_and_memoized(spark):
+def test_clone_is_aqe_off_and_new_per_call(spark):
     caller_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     child = loop_session(spark)
     assert child.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert loop_session(spark) is child
+    # every call returns a clone of its own: no other loop can see it
+    assert loop_session(spark) is not child
     # caller's AQE conf untouched (the whole point of the clone —
     # loop_session must NEVER mutate the parent's planning conf)
     assert spark.conf.get("spark.sql.adaptive.enabled") == caller_aqe
@@ -28,25 +29,32 @@ def test_clone_is_aqe_off_and_memoized(spark):
     )
 
 
-def test_loop_session_is_idempotent_on_clone(spark):
-    """loop_session(clone) is the clone itself — a caller that
-    pre-rebound its inputs into the clone (llm_dup_pagerank) must not
-    mint a nested second clone per application (r9 ADVICE)."""
+def test_loop_session_of_clone_is_a_new_clone(spark):
+    """loop_session(clone) clones the clone (pagerank called from
+    llm_dup_pagerank, whose inputs already live in the entry's clone):
+    a distinct AQE-off session that plans at the clone's width."""
     child = loop_session(spark)
-    assert loop_session(child) is child
+    child.conf.set("spark.sql.shuffle.partitions", "5")
+    grandchild = loop_session(child)
+    assert grandchild is not child
+    assert grandchild.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert grandchild.conf.get("spark.sql.shuffle.partitions") == "5"
 
 
 def test_loop_session_repropagates_parent_conf(spark):
-    """_LOOP_CONF_COPY values are re-copied on EVERY access: a parent
-    conf.set between loops governs the next loop's plans — the memoized
-    clone must not freeze the creation-time snapshot (r9 ADVICE)."""
+    """Each clone takes the parent's _LOOP_CONF_COPY values as they are
+    at ITS call: a parent conf.set between loops governs the next
+    loop's plans, and an earlier clone keeps the values it was made
+    with."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "5")
-        assert loop_session(spark).conf.get("spark.sql.shuffle.partitions") == "5"
+        at_five = loop_session(spark)
+        assert at_five.conf.get("spark.sql.shuffle.partitions") == "5"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert loop_session(spark).conf.get("spark.sql.shuffle.partitions") == old
+    assert at_five.conf.get("spark.sql.shuffle.partitions") == "5"
 
 
 def test_rebind_same_session_is_identity(spark):
@@ -299,8 +307,8 @@ def test_lazy_mark_shapes_width_independent(spark, width):
     shuffle-width independent — the hazard shapes (two+ marked branches
     off one base relation, chain-joined, base re-touched) must analyze
     and match the unmarked plan at widths 3/8/32. The parent's width is
-    set per-case; loop_session re-copies _LOOP_CONF_COPY on every
-    access, so the clone plans at the same width."""
+    set per-case; each lazy_mark's clone copies the parent's width at
+    its call, so the clone plans at the same width."""
     from blueflood_spark.session import lazy_mark
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
@@ -332,3 +340,48 @@ def test_lazy_mark_shapes_width_independent(spark, width):
                 assert got == want, (width, marks, extra_touch)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_concurrent_loops_match_serial_and_leave_caller_conf(spark):
+    """Connected components, PageRank and a KMV sketch mark on three
+    threads over one session, three times over. Each loop runs in its
+    own clone and fits its width there, so every result equals its
+    serial result, and the caller's AQE and shuffle width are the ones
+    it started with."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from blueflood_spark.operators import dedup as D
+    from blueflood_spark.operators import graph as GR
+    from blueflood_spark.operators.sketches import kmv_pair_overlap
+
+    ids = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(19)] + [(25, 30), (30, 35)],
+        "doc_a long, doc_b long",
+    )
+    und = [(0, 1), (1, 2), (0, 2), (2, 3)]
+    edges = spark.createDataFrame(und + [(b, a) for a, b in und], "src long, dst long")
+    nodes = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    groups = spark.createDataFrame(
+        [("A", v) for v in range(300)]
+        + [("B", v) for v in range(150, 450)]
+        + [("C", v) for v in range(400, 500)],
+        "g string, v long",
+    )
+    loops = [
+        lambda: D.connected_components(pairs, ids, driver_threshold=0),
+        lambda: GR.pagerank(edges, nodes, n_iter=5),
+        lambda: kmv_pair_overlap(groups, "v", "g", k=64),
+    ]
+
+    def rows(loop):
+        return sorted(map(tuple, loop().collect()))
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    serial = [rows(loop) for loop in loops]
+    with ThreadPoolExecutor(3) as ex:
+        for _ in range(3):
+            assert list(ex.map(rows, loops)) == serial
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
