@@ -55,28 +55,28 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     ambient_sec = ambient_probe(sf_dir)
-    # 8 shuffle partitions: at sf0.1 task-scheduling latency dominates
-    # shuffle work, and the r4 A/B (16 vs 12 vs 8 on both the light and
-    # the heavy subsets) had 8 fastest everywhere — heavy subset 24.4s →
-    # 19.8s. The concurrent pass runs 4 queries × 8 partitions = one
-    # task per core. Clusters size this to cores/data, not to this
-    # constant. FAIR scheduling so the concurrent pass shares cores
-    # across in-flight queries the way a multi-tenant query service
-    # does.
+    # One shuffle partition per core, the cores taken from the CPU
+    # affinity mask (what `nproc` prints), as perfbench's session profile
+    # does. At sf0.1 task-scheduling latency dominates shuffle work: the
+    # r4 A/B (16 vs 12 vs 8 partitions) had the narrowest fastest on both
+    # the light and the heavy subsets, heavy subset 24.4s → 19.8s. FAIR
+    # scheduling so the concurrent pass shares cores across in-flight
+    # queries the way a multi-tenant query service does.
     # AQE stays ON — measured A/B at sf0.1: with the analyzed-reader
     # memoization in _t() the trivial-query constant is AQE-insensitive
     # (~15 ms), while the heavy multi-stage queries (LSH band joins,
     # shingle joins) are 10-30% FASTER with AQE's partition coalescing.
     # Same config as production, where AQE also earns skew handling.
+    cores = len(os.sched_getaffinity(0))
     spark = get_spark(
-        "bench", shuffle_partitions=8, **{"spark.scheduler.mode": "FAIR"}
+        "bench", shuffle_partitions=cores, **{"spark.scheduler.mode": "FAIR"}
     )
 
     # warm up the JVM + parquet footer caches with the flagship query, and
     # spawn the Python worker pool so the first pandas-path query doesn't
     # pay ~0.2s × cores of interpreter startup inside its measurement
     E.q01_pricing_summary(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    warm = spark.range(0, 1024, 1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    warm = spark.range(0, 1024, 1, cores)
     warm.mapInPandas(lambda it: it, schema="id long").write.mode("overwrite").format("noop").save()
 
     # Warm the I/O path WITHOUT pinning anything in Spark's block cache

@@ -17,15 +17,16 @@ samples) — it broadcasts; the token explode is linear in catalog size, not
 data size.
 
 Search execution: each search reads the tenant's rows as a ScanSpec
-(plans/scan.py), and its Spark frame (rlike filter, dedup or grouping)
-defines the result. When the catalog is a small plain parquet scan whose
-files hold at most _LOCAL_FRAME_MAX_ROWS rows (plans/scan.py) and the
-glob's regex reads alike in Python's re (glob.python_matcher), the search
-reads the rows eagerly, at call time, on the driver, does the match, the
-dedup or the next-level grouping in Python and returns a LocalRelation
-frame with the Spark frame's schema: collecting it runs no Spark job.
-Otherwise it returns the lazy Spark frame, as before. The path is logged
-at DEBUG on this module's logger.
+(plans/scan.py), and its Spark plan (search_metrics_frame /
+search_metric_names_frame: rlike filter, dedup or grouping) defines the
+result. When the catalog is a small plain parquet scan whose files hold at
+most _LOCAL_FRAME_MAX_ROWS rows (plans/scan.py) and the glob's regex reads
+alike in Python's re (glob.python_matcher), the search reads the rows
+eagerly, at call time, on the driver, does the match, the dedup or the
+next-level grouping in Python and returns a LocalRelation frame of the
+plan's schema, taken from the schema memo (scan.plan_schema): it builds no
+Spark frame, and collecting it runs no Spark job. Otherwise it returns the
+lazy plan, as before. The path is logged at DEBUG on this module's logger.
 """
 
 from __future__ import annotations
@@ -37,7 +38,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from blueflood_spark.functions.glob import anchored, glob_to_regex, next_level_regex, python_matcher
-from blueflood_spark.plans.scan import ScanSpec, SparkOnly, local_frame, scan_frame, through_gate, to_rows
+from blueflood_spark.plans.scan import (
+    ScanSpec,
+    SparkOnly,
+    local_frame,
+    plan_schema,
+    scan_frame,
+    through_gate,
+    to_rows,
+)
 
 if TYPE_CHECKING:
     import pyarrow as pa
@@ -95,6 +104,22 @@ def _matching(table: pa.Table, glob: str, regex: str) -> list[dict]:
     return [r for r in rows if r["metric_name"] is not None and rx.search(r["metric_name"])]
 
 
+def search_metrics_frame(
+    catalog: DataFrame, tenant_id: str, glob: str, include_enum_values: bool = False
+) -> DataFrame:
+    """The Spark plan of a search_metrics request: the tenant's rows whose
+    name the glob's regex matches, deduped by name."""
+    spec = _tenant_scan(catalog, tenant_id, ("tenant_id", "metric_name", "unit"))
+    out = (
+        scan_frame(spec)
+        .filter(F.col("metric_name").rlike(anchored(glob_to_regex(glob))))
+        .dropDuplicates(["tenant_id", "metric_name"])
+    )
+    if include_enum_values:
+        out = out.withColumn("enum_values", F.array().cast("array<string>"))
+    return out
+
+
 def search_metrics(
     catalog: DataFrame, tenant_id: str, glob: str, include_enum_values: bool = False
 ) -> DataFrame:
@@ -114,13 +139,7 @@ def search_metrics(
     feature is not."""
     regex = anchored(glob_to_regex(glob))
     spec = _tenant_scan(catalog, tenant_id, ("tenant_id", "metric_name", "unit"))
-    out = (
-        scan_frame(spec)
-        .filter(F.col("metric_name").rlike(regex))
-        .dropDuplicates(["tenant_id", "metric_name"])
-    )
-    if include_enum_values:
-        out = out.withColumn("enum_values", F.array().cast("array<string>"))
+    plan = lambda: search_metrics_frame(catalog, tenant_id, glob, include_enum_values)  # noqa: E731
 
     def on_driver(table: pa.Table) -> DataFrame:
         first: dict[str, dict] = {}
@@ -129,9 +148,38 @@ def search_metrics(
         found = [first[n] for n in sorted(first)]
         if include_enum_values:
             found = [dict(r, enum_values=[]) for r in found]
-        return local_frame(out, found)
+        schema = plan_schema(spec, ("search_metrics", include_enum_values), plan)
+        return local_frame(catalog.sparkSession, schema, found)
 
-    return through_gate(spec, on_driver, lambda: out, log, "metric search", bounded=True)
+    return through_gate(spec, on_driver, plan, log, "metric search", bounded=True)
+
+
+def search_metric_names_frame(catalog: DataFrame, tenant_id: str, glob: str) -> DataFrame:
+    """The Spark plan of a search_metric_names request: the tenant's names
+    that the glob's next-level regex matches, truncated to the glob's
+    depth plus one and grouped."""
+    base_level = len(glob.split("."))
+    spec = _tenant_scan(catalog, tenant_id, ("metric_name",))
+    matched = scan_frame(spec).filter(F.col("metric_name").rlike(anchored(next_level_regex(glob))))
+    parts = F.split(F.col("metric_name"), r"\.")
+    truncated = matched.select(
+        F.concat_ws(".", F.slice(parts, 1, base_level)).alias("name"),
+        (F.size(parts) == base_level).alias("is_complete"),
+    )
+    # a truncated name is a leaf iff a complete metric exists at base level;
+    # it has a next level iff some metric extends past base level
+    return (
+        truncated.groupBy("name")
+        .agg(
+            F.max(F.when(F.col("is_complete"), 1).otherwise(0)).alias("has_complete"),
+            F.max(F.when(~F.col("is_complete"), 1).otherwise(0)).alias("has_next"),
+        )
+        .select(
+            F.col("name").alias("metric_name"),
+            (F.col("has_complete") == 1).alias("is_leaf"),
+            (F.col("has_next") == 1).alias("has_next_level"),
+        )
+    )
 
 
 def search_metric_names(catalog: DataFrame, tenant_id: str, glob: str) -> DataFrame:
@@ -145,26 +193,7 @@ def search_metric_names(catalog: DataFrame, tenant_id: str, glob: str) -> DataFr
     regex = anchored(next_level_regex(glob))
     base_level = len(glob.split("."))
     spec = _tenant_scan(catalog, tenant_id, ("metric_name",))
-    matched = scan_frame(spec).filter(F.col("metric_name").rlike(regex))
-    parts = F.split(F.col("metric_name"), r"\.")
-    truncated = matched.select(
-        F.concat_ws(".", F.slice(parts, 1, base_level)).alias("name"),
-        (F.size(parts) == base_level).alias("is_complete"),
-    )
-    # a truncated name is a leaf iff a complete metric exists at base level;
-    # it has a next level iff some metric extends past base level
-    out = (
-        truncated.groupBy("name")
-        .agg(
-            F.max(F.when(F.col("is_complete"), 1).otherwise(0)).alias("has_complete"),
-            F.max(F.when(~F.col("is_complete"), 1).otherwise(0)).alias("has_next"),
-        )
-        .select(
-            F.col("name").alias("metric_name"),
-            (F.col("has_complete") == 1).alias("is_leaf"),
-            (F.col("has_next") == 1).alias("has_next_level"),
-        )
-    )
+    plan = lambda: search_metric_names_frame(catalog, tenant_id, glob)  # noqa: E731
 
     def on_driver(table: pa.Table) -> DataFrame:
         flags: dict[str, list[bool]] = {}
@@ -173,9 +202,9 @@ def search_metric_names(catalog: DataFrame, tenant_id: str, glob: str) -> DataFr
             f = flags.setdefault(".".join(tokens[:base_level]), [False, False])
             f[0] |= len(tokens) == base_level
             f[1] |= len(tokens) != base_level
-        return local_frame(out, [
+        return local_frame(catalog.sparkSession, plan_schema(spec, ("search_metric_names",), plan), [
             {"metric_name": n, "is_leaf": leaf, "has_next_level": nxt}
             for n, (leaf, nxt) in sorted(flags.items())
         ])
 
-    return through_gate(spec, on_driver, lambda: out, log, "metric name browse", bounded=True)
+    return through_gate(spec, on_driver, plan, log, "metric name browse", bounded=True)

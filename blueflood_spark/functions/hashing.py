@@ -48,10 +48,6 @@ def safe_div(num: Column, den: Column) -> Column:
     return F.when((den.isNull()) | (den == 0), F.lit(0.0)).otherwise(num / den)
 
 
-def safe_div_sql(num: str, den: str) -> str:
-    return f"(CASE WHEN {den} IS NULL OR {den} = 0 THEN 0.0 ELSE {num} / {den} END)"
-
-
 def md5_bucket(col: Column, salt: str, mod: int = 100) -> Column:
     """Deterministic uniform bucket in [0, mod): first 8 md5-hex chars of
     the salted id, as a long, mod `mod`. THE sampling primitive for

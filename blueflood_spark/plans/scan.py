@@ -14,16 +14,25 @@ and logs the path each request took at DEBUG on the caller's logger.
 
 The driver read hands its endpoint an Arrow table of the spec's output
 columns; to_rows turns it into Row-like dicts. Endpoints that return a
-DataFrame wrap their driver result with local_frame: a LocalRelation with
+DataFrame wrap their driver result with local_frame: a LocalRelation of
 the Spark frame's schema, so the caller's collect() runs no job and sees
-the same schema either way. Their reads are bounded: files that hold more
-than _LOCAL_FRAME_MAX_ROWS rows in all run the Spark plan.
+the same schema either way. They build their Spark frame only on the Spark
+path: the LocalRelation's schema comes from plan_schema, a memo keyed by
+everything that schema depends on and filled by building the plan once.
+Their reads are bounded: files that hold more than _LOCAL_FRAME_MAX_ROWS
+rows in all run the Spark plan.
+
+A driver-path request makes few py4j round trips: the facts a table
+handle fixes (a plain parquet scan, its partition columns, its schema) are
+memoized per handle; only its cache state and its file listing, which can
+change under the handle, are read per request.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 from functools import reduce
@@ -31,8 +40,7 @@ from operator import and_
 from typing import TYPE_CHECKING, TypeVar
 from urllib.parse import unquote, urlparse
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -136,6 +144,45 @@ def _dir_value(path: str, column: str) -> str | None:
     return None
 
 
+@dataclass(frozen=True)
+class _Table:
+    """The facts of a plain parquet table handle that _local_scan needs:
+    its partition columns and its schema."""
+
+    dirs: frozenset[str]
+    schema: T.StructType
+
+
+# Per table handle: its _Table, or why it is not a plain parquet file scan.
+# A DataFrame's analyzed plan never changes, so neither do these facts;
+# DataFrames hash by identity, and a handle's entry goes with it. What
+# can change under a handle (its cache state, its file listing) is read
+# per request. No lock: two requests that fill the same handle at once
+# store equal facts.
+_TABLES: weakref.WeakKeyDictionary[DataFrame, _Table | str] = weakref.WeakKeyDictionary()
+
+
+def _table(df: DataFrame) -> _Table:
+    """`df`'s memoized _Table; raises SparkOnly when `df` is not a plain
+    parquet file scan (a LogicalRelation over a parquet HadoopFsRelation)."""
+    facts = _TABLES.get(df)
+    if facts is None:
+        plan = df._jdf.queryExecution().analyzed()
+        rel = plan.relation() if plan.getClass().getSimpleName() == "LogicalRelation" else None
+        if (
+            rel is None
+            or rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        ):
+            facts = "not a plain parquet scan"
+        else:
+            facts = _Table(frozenset(rel.partitionSchema().fieldNames()), df.schema)
+        _TABLES[df] = facts
+    if isinstance(facts, str):
+        raise SparkOnly(facts)
+    return facts
+
+
 def _local_scan(spec: ScanSpec) -> tuple[list[str], list, T.StructType]:
     """What a driver read of `spec` scans: the local parquet files left
     after pruning partition directories, the predicates left for the rows,
@@ -145,20 +192,16 @@ def _local_scan(spec: ScanSpec) -> tuple[list[str], list, T.StructType]:
 
     The files come from `inputFiles()`, Spark's own cached listing, so both
     paths see the same files. That listing is not pruned by partition
-    filters on path-based tables, hence the pruning here."""
+    filters on path-based tables, hence the pruning here. The table's
+    facts are memoized per handle (_table); its cache state and listing
+    are read on every call."""
     df = spec.table
-    plan = df._jdf.queryExecution().analyzed()
-    rel = plan.relation() if plan.getClass().getSimpleName() == "LogicalRelation" else None
-    if (
-        rel is None
-        or rel.getClass().getSimpleName() != "HadoopFsRelation"
-        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
-    ):
-        raise SparkOnly("not a plain parquet scan")
-    if df.storageLevel != StorageLevel.NONE:
+    table = _table(df)
+    # an uncached plan's storage level is NONE, the one level that holds no data
+    if df._jdf.storageLevel().isValid():
         raise SparkOnly("cached")
-    dirs = set(rel.partitionSchema().fieldNames())
-    types = {f.name: f.dataType for f in df.schema.fields}
+    dirs = table.dirs
+    types = {f.name: f.dataType for f in table.schema.fields}
     # a partition equality prunes directories when its column is one;
     # otherwise (e.g. `resolution` in a batch_id=N/ sink) it filters rows
     prune = {c: v for c, v in spec.partition if c in dirs}
@@ -181,7 +224,7 @@ def _local_scan(spec: ScanSpec) -> tuple[list[str], list, T.StructType]:
         path = unquote(u.path)
         if all(_dir_value(path, c) == v for c, v in prune.items()):
             files.append(path)
-    return sorted(files), preds, T.StructType([df.schema[c] for c in needed])
+    return sorted(files), preds, T.StructType([table.schema[c] for c in needed])
 
 
 def _read_on_driver(
@@ -285,14 +328,32 @@ def through_gate(
     return on_spark()
 
 
-def local_frame(like: DataFrame, data: pa.Table | list[dict]) -> DataFrame:
-    """`data` (an Arrow table with `like`'s columns, or rows) as a
-    LocalRelation-backed frame with `like`'s schema: its collect() runs no
-    Spark job."""
+# The output schema of a frame-returning endpoint's plan, keyed by the
+# endpoint, its options that change the schema, and the schema of the
+# table it reads: everything the schema depends on. Filled by building the
+# plan once, so the Spark plan stays the only source of the schema. No
+# lock: two requests that fill the same key at once store equal schemas.
+_PLAN_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def plan_schema(spec: ScanSpec, key: tuple, plan: Callable[[], DataFrame]) -> T.StructType:
+    """The schema of `plan()`, an endpoint's Spark frame over `spec`'s
+    plain parquet table, memoized under `key` (the endpoint and its
+    schema-changing options) and the table's schema."""
+    full = (*key, _table(spec.table).schema)
+    schema = _PLAN_SCHEMAS.get(full)
+    if schema is None:
+        schema = _PLAN_SCHEMAS[full] = plan().schema
+    return schema
+
+
+def local_frame(spark: SparkSession, schema: T.StructType, data: pa.Table | list[dict]) -> DataFrame:
+    """`data` (an Arrow table with `schema`'s columns, or rows) as a
+    LocalRelation-backed frame of `schema`: its collect() runs no Spark
+    job."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = like.schema
     want = to_arrow_schema(schema)
     table = data.cast(want) if isinstance(data, pa.Table) else pa.Table.from_pylist(data, schema=want)
-    return like.sparkSession.createDataFrame(table, schema=schema)
+    return spark.createDataFrame(table, schema=schema)
